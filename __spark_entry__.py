@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geo_inference_spark.functions.derive import GRID_AREA_SQL, LAT_SQL, LON_SQL
+from geo_inference_spark.operators.geocode import spread
 from geo_inference_spark.operators.knn import knn_join
 from geo_inference_spark.operators.overlap import overlap_stitch, raster_to_chunks
 from geo_inference_spark.operators.pip_join import pages_per_area
@@ -547,10 +548,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the aggregate/transform token folds otherwise run on 2 cores
     # (event-log measured 0.74 s in a 2-task stage). Conditional — a
     # real multi-file table keeps its scan partitioning.
-    par = spark.sparkContext.defaultParallelism
-    qsrc = docs.select("doc_id", "text")
-    if qsrc.rdd.getNumPartitions() < par:
-        qsrc = qsrc.repartition(par)
+    qsrc = spread(docs.select("doc_id", "text"))
     quality = TA.with_quality(qsrc).select("doc_id", "quality_score")
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("quality_score"), F.asc("doc_id")

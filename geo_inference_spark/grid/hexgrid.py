@@ -83,13 +83,22 @@ def unpack(cell):
 # ---------------------------------------------------------------- public API
 
 def latlng_to_cell(lat, lng, res: int):
-    """Vectorized (lat, lng) degrees -> int64 cell id at ``res``."""
+    """Vectorized (lat, lng) degrees -> int64 cell id at ``res``.
+
+    A non-finite lat or lng (NaN, null read as NaN, +-inf) has no
+    cell: its id is 0, which lacks the flag bit and so is never a
+    real cell."""
     lat = np.asarray(lat, dtype=np.float64)
     lng = np.asarray(lng, dtype=np.float64)
+    ok = np.isfinite(lat) & np.isfinite(lng)
+    valid = bool(ok.all())
+    if not valid:  # zero the bad rows so the int cast stays defined
+        lat, lng = np.where(ok, lat, 0.0), np.where(ok, lng, 0.0)
     s = cell_size(res)
     qf, rf = _xy_to_axial_frac(lng, lat, s)
     q, r = _cube_round(qf, rf)
-    return pack(res, q, r)
+    cell = pack(res, q, r)
+    return cell if valid else np.where(ok, cell, 0)
 
 
 def cell_to_latlng(cell):

@@ -4,6 +4,13 @@ North-star stage (a): "geocodes pages into H3 (res 7-10) / S2 cells
 via vectorized Arrow UDFs" (BASELINE.json). The UDFs are pandas_udf
 (Arrow-batched, no per-row Python); the cell math itself is the pure
 numpy in grid/hexgrid.py and grid/s2.py.
+
+``cell_keyed`` is the one entry point for batch operators (pip_join,
+knn_join, radius_join): it spreads a few-partition input, geocodes it
+at one or several resolutions and fences the join key. Only callers
+that cannot share it geocode with ``hex_cell_udf`` directly: a
+streaming frame has no ``.rdd`` to count partitions, and
+write_pages_partitioned chooses its own partitioning.
 """
 
 from __future__ import annotations
@@ -22,28 +29,6 @@ def hex_cell_udf(res: int):
         return pd.Series(
             hexgrid.latlng_to_cell(lat.to_numpy(), lon.to_numpy(), res)
         )
-
-    return _udf
-
-
-def hex_cells_udf(res_list):
-    """Cells at SEVERAL resolutions in one Arrow eval: array<long> of
-    len(res_list) cells per point, in res_list order. One python
-    roundtrip instead of one per resolution — the multi-res cover
-    join geocodes every point for all its resolutions in a single
-    eval node (see pip_join)."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType
-
-    rs = [int(r) for r in res_list]
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la, lo = lat.to_numpy(), lon.to_numpy()
-        arr = np.stack(
-            [hexgrid.latlng_to_cell(la, lo, r) for r in rs], axis=1
-        )
-        return pd.Series(list(arr))
 
     return _udf
 
@@ -95,10 +80,6 @@ def hex_cell_sql(
     return f"({flag_lit} | {res_shift} | {q_shift} | ({r} + {off}))"
 
 
-def hex_cell_col(res: int, lat_col: str = "lat", lon_col: str = "lon"):
-    return F.expr(hex_cell_sql(res, lat_col, lon_col))
-
-
 def s2_cell_udf(level: int):
     @F.pandas_udf(LongType())
     def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
@@ -107,24 +88,40 @@ def s2_cell_udf(level: int):
     return _udf
 
 
-def with_cells(
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition to defaultParallelism when ``df`` has fewer
+    partitions. Single-file inputs arrive as ONE scan partition (the
+    testdata parquet is one row group), which would run the UDF chain
+    after it on one core. Conditional: a real table has partitions >=
+    slots and keeps the no-shuffle contract."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df
+
+
+def cell_keyed(
     df: DataFrame,
+    res_list: list[int],
     lat_col: str = "lat",
     lon_col: str = "lon",
-    hex_res: tuple[int, ...] = (7, 8, 9, 10),
-    s2_levels: tuple[int, ...] = (12,),
+    out: str = "cell",
 ) -> DataFrame:
-    """Add cell_h{r} and cell_s2_{l} columns.
+    """``spread(df)`` plus a non-null cell-id join key ``out``.
 
-    One projection, no shuffle; Catalyst keeps it in the same stage as
-    the scan. Cheap enough to recompute rather than persist — at 100TB
-    you'd still store cell_h7 as an Iceberg partition column at write
-    time (SURVEY.md §4 "partition the table by cell prefix").
+    One resolution adds one column. Several resolutions explode one
+    row per resolution, each from its own ``hex_cell_udf`` column;
+    Spark evaluates all of them in ONE ArrowEvalPython node, so every
+    point crosses into Python once. Cell ids embed their resolution,
+    so keys at different resolutions never collide.
+
+    coalesce(..., 0) is the key fence: an inner join on a nullable
+    Python-UDF key infers an isnotnull pre-join Filter that
+    materializes a SECOND ArrowEvalPython geocoding every point. The
+    UDF never returns null; non-finite coordinates get id 0, which is
+    never a real cell (no flag bit), so they match no cover.
     """
-    for r in hex_res:
-        df = df.withColumn(f"cell_h{r}", hex_cell_udf(r)(F.col(lat_col), F.col(lon_col)))
-    for lv in s2_levels:
-        df = df.withColumn(
-            f"cell_s2_{lv}", s2_cell_udf(lv)(F.col(lat_col), F.col(lon_col))
-        )
-    return df
+    lat, lon = F.col(lat_col), F.col(lon_col)
+    keys = [F.coalesce(hex_cell_udf(r)(lat, lon), F.lit(0)) for r in res_list]
+    key = keys[0] if len(keys) == 1 else F.explode(F.array(*keys))
+    return spread(df).withColumn(out, key)

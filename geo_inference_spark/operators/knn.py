@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..grid import hexgrid
-from .geocode import hex_cell_udf
+from .geocode import cell_keyed
 
 R_KM = 6371.0088  # IUGG mean earth radius
 KM_PER_DEG = np.pi * R_KM / 180.0
@@ -121,6 +121,73 @@ def _box_cover_cells(
     ]))
 
 
+def _box_cover(
+    spark: SparkSession, queries: pd.DataFrame, radius_km: float, res: int,
+    max_cover_cells: int,
+):
+    """(qid, cell) spherical-box cover of every query whose cover has
+    at most ``max_cover_cells`` cells (None if no query's does), and
+    the qids of the queries over that cap."""
+    frames, over = [], []
+    for qid, qlat, qlon in queries[["qid", "lat", "lon"]].itertuples(
+        index=False
+    ):
+        cells = _box_cover_cells(float(qlat), float(qlon), radius_km, res)
+        if cells.size > max_cover_cells:
+            over.append(int(qid))
+        else:
+            frames.append(pd.DataFrame({
+                "qid": np.full(cells.size, int(qid), np.int64),
+                "cell": cells,
+            }))
+    if not frames:
+        return None, over
+    cover = spark.createDataFrame(
+        pd.concat(frames, ignore_index=True), schema="qid long, cell long"
+    )
+    return cover, over
+
+
+def _qmeta(spark: SparkSession, queries: pd.DataFrame) -> DataFrame:
+    """(qid, qlat, qlon) of the queries, for the broadcast side."""
+    return spark.createDataFrame(
+        queries[["qid", "lat", "lon"]],
+        schema="qid long, lat double, lon double",
+    ).select("qid", F.col("lat").alias("qlat"), F.col("lon").alias("qlon"))
+
+
+def _topk(hits: DataFrame, k: int) -> DataFrame:
+    """The k nearest hits per query, ties broken by id: (qid, id,
+    dist, rn)."""
+    w = Window.partitionBy("qid").orderBy("dist", "id")
+    return (
+        hits.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("qid", "id", "dist", "rn")
+    )
+
+
+def _keyed_points(
+    points: DataFrame, id_col: str, lat_col: str, lon_col: str, res: int
+) -> DataFrame:
+    """The slim (id, lat, lon, cell) projection both operators probe."""
+    return cell_keyed(
+        points.select(
+            F.col(id_col).alias("id"), F.col(lat_col).alias("lat"),
+            F.col(lon_col).alias("lon"),
+        ),
+        [res],
+    )
+
+
+def _check_queries(queries: pd.DataFrame) -> None:
+    """A query needs a finite lat and lon: a NaN one has no cell to
+    ring and no distance to rank by."""
+    ll = queries[["lat", "lon"]].to_numpy(dtype=np.float64)
+    if not np.isfinite(ll).all():
+        raise ValueError("queries need finite lat and lon")
+
+
 def knn_join(
     spark: SparkSession,
     points: DataFrame,
@@ -152,22 +219,12 @@ def knn_join(
     broadcast cover path instead of the fallback — round-4 upgrade
     over the planar-guarantee -inf routing).
     """
+    _check_queries(queries)
     s = hexgrid.cell_size(res)
     # persist the geocoded projection: every escalation round (and the
     # brute-force fallback) re-reads it, and without the persist each
     # action re-runs the geocode UDF over the full table
-    pts = points.select(
-        F.col(id_col).alias("id"), F.col(lat_col).alias("lat"),
-        F.col(lon_col).alias("lon"),
-    )
-    # single-file scans are one partition: spread the slim projection
-    # before the geocode UDF (conditional — no shuffle on real tables)
-    par = spark.sparkContext.defaultParallelism
-    if pts.rdd.getNumPartitions() < par:
-        pts = pts.repartition(par)
-    pts = pts.withColumn(
-        "cell", hex_cell_udf(res)(F.col("lat"), F.col("lon"))
-    ).persist()
+    pts = _keyed_points(points, id_col, lat_col, lon_col, res).persist()
 
     remaining = queries[["qid", "lat", "lon"]].copy()
     results: list = []
@@ -179,40 +236,17 @@ def knn_join(
         if metric == "planar":
             cand = _candidates_df(spark, remaining, res, kr)
         else:
-            frames = []
-            for _, q in remaining.iterrows():
-                cells = _box_cover_cells(
-                    float(q["lat"]), float(q["lon"]), r_km, res
-                )
-                if cells.size > max_cover_cells:
-                    continue  # no cover this round -> survives to fallback
-                frames.append(pd.DataFrame({
-                    "qid": np.full(cells.size, int(q["qid"]), np.int64),
-                    "cell": cells,
-                }))
-            if not frames:
+            # a query over the cap gets no cover this round and
+            # survives to the fallback
+            cand, _ = _box_cover(spark, remaining, r_km, res, max_cover_cells)
+            if cand is None:
                 break  # every remaining cover explodes: fallback
-            cand = spark.createDataFrame(
-                pd.concat(frames, ignore_index=True),
-                schema="qid long, cell long",
-            )
-        qmeta = spark.createDataFrame(
-            remaining, schema="qid long, lat double, lon double"
-        ).select(
-            "qid", F.col("lat").alias("qlat"), F.col("lon").alias("qlon")
-        )
         hits = (
             pts.join(F.broadcast(cand), on="cell")
-            .join(F.broadcast(qmeta), on="qid")
+            .join(F.broadcast(_qmeta(spark, remaining)), on="qid")
             .withColumn("dist", _dist_col(metric))
         )
-        w = Window.partitionBy("qid").orderBy("dist", "id")
-        topk = (
-            hits.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("qid", "id", "dist", "rn")
-        )
-        got = topk.toPandas()
+        got = _topk(hits, k).toPandas()
         guarantee = (
             1.5 * s * (kr + 1) - 2.0 * s if metric == "planar" else r_km
         )
@@ -246,6 +280,8 @@ def knn_join(
 
         def local_topk(batches):
             for pdf in batches:
+                # a point without finite coordinates has no distance
+                pdf = pdf[np.isfinite(pdf["lat"]) & np.isfinite(pdf["lon"])]
                 if not len(pdf):
                     continue
                 ids = pdf["id"].to_numpy(np.int64)
@@ -283,26 +319,14 @@ def knn_join(
         cand = pts.mapInPandas(
             local_topk, "qid long, id long, lat double, lon double"
         )
-        qmeta = spark.createDataFrame(
-            remaining, schema="qid long, lat double, lon double"
-        ).select(
-            "qid", F.col("lat").alias("qlat"), F.col("lon").alias("qlon")
-        )
-        hits = cand.join(F.broadcast(qmeta), on="qid").withColumn(
-            "dist", _dist_col(metric)
-        )
+        hits = cand.join(
+            F.broadcast(_qmeta(spark, remaining)), on="qid"
+        ).withColumn("dist", _dist_col(metric))
         if plan_sink is not None:  # tests pin the fallback's shape
             plan_sink.append(
                 hits._jdf.queryExecution().executedPlan().toString()
             )
-        w = Window.partitionBy("qid").orderBy("dist", "id")
-        got = (
-            hits.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("qid", "id", "dist", "rn")
-            .toPandas()
-        )
-        results.append(got)
+        results.append(_topk(hits, k).toPandas())
 
     pts.unpersist()
     out = (
@@ -343,49 +367,11 @@ def radius_join(
     globe-spanning radii) fall back to an exact full filter — still
     one scan of the slim projection.
     """
-    s = hexgrid.cell_size(res)
-    pts = points.select(
-        F.col(id_col).alias("id"), F.col(lat_col).alias("lat"),
-        F.col(lon_col).alias("lon"),
-    )
-    par = spark.sparkContext.defaultParallelism
-    if pts.rdd.getNumPartitions() < par:
-        pts = pts.repartition(par)
-    # coalesce = non-nullable key fence (see pip_join): stops the
-    # cover join's inferred isnotnull(cell) from materializing a
-    # second geocode ArrowEvalPython; the UDF never returns null
-    pts = pts.withColumn(
-        "cell",
-        F.coalesce(
-            hex_cell_udf(res)(F.col("lat"), F.col("lon")), F.lit(0)
-        ),
-    )
-    qmeta = spark.createDataFrame(
-        queries[["qid", "lat", "lon"]], schema="qid long, lat double, lon double"
-    ).select("qid", F.col("lat").alias("qlat"), F.col("lon").alias("qlon"))
-
-    covered, fallback = [], []
-    for _, q in queries.iterrows():
-        cells = _box_cover_cells(
-            float(q["lat"]), float(q["lon"]), radius_km, res
-        )
-        if cells.size > max_cover_cells:
-            fallback.append(int(q["qid"]))
-        else:
-            covered.append((int(q["qid"]), cells))
-
+    _check_queries(queries)
+    pts = _keyed_points(points, id_col, lat_col, lon_col, res)
+    cover, fallback = _box_cover(spark, queries, radius_km, res, max_cover_cells)
     parts = []
-    if covered:
-        frames = [
-            pd.DataFrame({
-                "qid": np.full(cells.size, qid, np.int64),
-                "cell": cells,
-            })
-            for qid, cells in covered
-        ]
-        cover = spark.createDataFrame(
-            pd.concat(frames, ignore_index=True), schema="qid long, cell long"
-        )
+    if cover is not None:
         parts.append(pts.join(F.broadcast(cover), on="cell"))
     if fallback:
         fb = spark.createDataFrame(
@@ -398,7 +384,7 @@ def radius_join(
         )
     out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     return (
-        out.join(F.broadcast(qmeta), on="qid")
+        out.join(F.broadcast(_qmeta(spark, queries)), on="qid")
         .withColumn("dist", _dist_col("haversine"))
         .filter(F.col("dist") <= float(radius_km))
         .select("qid", "id", F.col("dist").alias("dist_km"))

@@ -31,7 +31,7 @@ from pyspark.sql.types import BooleanType
 
 from ..geom.wkb import iter_polygons
 from ..grid import hexgrid
-from .geocode import hex_cell_udf, hex_cells_udf
+from .geocode import cell_keyed
 
 
 def build_cover(
@@ -181,13 +181,6 @@ def pip_join(
     pts = points
     if keep_cols is not None:
         pts = pts.select(*keep_cols, lat_col, lon_col)
-    # single-file inputs arrive as ONE scan partition (the testdata
-    # parquet is one row group), which would run the geocode +
-    # refine UDF chain on one core. Conditional: a real table has
-    # partitions >= slots and keeps the no-shuffle contract.
-    par = spark.sparkContext.defaultParallelism
-    if pts.rdd.getNumPartitions() < par:
-        pts = pts.repartition(par)
     refine = _refine_udf(polygons_pdf)
     res_list = sorted(int(r) for r in cover_pdf["res"].unique())
     if not res_list:
@@ -200,38 +193,22 @@ def pip_join(
     # eval PER RESOLUTION (3 full passes over the pages table for a
     # 3-res cover; steady-state 1.7 s -> 0.72 s at 300k pages, and at
     # 100 TB the duplicate scans are the whole cost).
+    # cell_keyed fuses the resolutions as one long column per res,
+    # exploded in the JVM; Spark evaluates all of them in that single
+    # ArrowEvalPython node. An array<long> UDF output (one list per
+    # point) was slower: every row became a numpy array in the worker
+    # and an Arrow list on the way back — perfbench pip_scan
+    # (pages_per_area(res=9), 2M pages, 4 vCPU) op_p50_ms, median of
+    # 6 seeds: 3.38 s fused columns vs 5.46 s array UDF, same counts.
     # Arrow-batched UDF geocode: measured faster end-to-end than
     # the pure-SQL expression (hex_cell_sql) in this pipeline —
     # re-measured round 4 at 30M rows/local[8]: UDF 7.7 s vs
     # 61.5 s for the withColumn SQL-expr variant.
-    # coalesce = non-nullable key fence: the inner join otherwise
-    # infers isnotnull over the python-UDF key as a pre-join Filter
-    # that materializes a SECOND ArrowEvalPython geocoding every
-    # point (plan-verified); latlng_to_cell never returns null so
-    # the value is unchanged.
     cov_all = spark.createDataFrame(
         cover_pdf.drop(columns=["res"]),
         schema="cell long, area_id long, boundary boolean",
     )
-    if len(res_list) == 1:
-        pts_g = pts.withColumn(
-            "_cell",
-            F.coalesce(
-                hex_cell_udf(res_list[0])(F.col(lat_col), F.col(lon_col)),
-                F.lit(0),
-            ),
-        )
-    else:
-        multi = hex_cells_udf(res_list)
-        pts_g = pts.withColumn(
-            "_cell",
-            F.explode(
-                F.coalesce(
-                    multi(F.col(lat_col), F.col(lon_col)),
-                    F.array(*[F.lit(0)] * len(res_list)),
-                )
-            ),
-        )
+    pts_g = cell_keyed(pts, res_list, lat_col, lon_col, "_cell")
     out = pts_g.join(
         F.broadcast(cov_all), on=pts_g["_cell"] == cov_all["cell"],
         how="inner",

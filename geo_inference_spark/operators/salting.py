@@ -120,13 +120,6 @@ def salted_topk(
     )
 
 
-def repartition_salted(df: DataFrame, keys: list[str], n: int = 16) -> DataFrame:
-    """Repartition by (keys..., salt) — spreads a hot key over n
-    partitions ahead of a grouped UDF that tolerates split groups
-    (i.e. whose reducer is associative)."""
-    return with_salt(df, n).repartition(*[F.col(k) for k in keys], F.col("_salt"))
-
-
 def estimate_hot_share(
     df: DataFrame,
     keys: list[str],

@@ -145,45 +145,6 @@ def _cap_buckets(buckets: DataFrame, max_bucket: int | None) -> DataFrame:
     return buckets.join(F.broadcast(big), ["band", "key"], "left_anti")
 
 
-def _banded_buckets(
-    sig: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    rows_per_band: int,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """(id, band, key) bucket rows from a signature frame; one explode
-    pass emits every band instead of B unioned scans. ``max_bucket``
-    deterministically drops WHOLE buckets larger than the cap — the
-    standard LSH skew guard (a bucket of N near-identical docs would
-    otherwise emit N^2/2 candidate rows); mirrored in the DuckDB
-    oracle by the same windowed count."""
-    bands = num_hashes // rows_per_band
-    band_cols = []
-    for b in range(bands):
-        mh_cols = [f"mh{b * rows_per_band + i}" for i in range(rows_per_band)]
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat(*[F.col(c) for c in mh_cols])).alias("key"),
-            )
-        )
-    buckets = sig.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array(*band_cols)).alias("bk"),
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "key")
-        buckets = (
-            buckets.withColumn("_bc", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bc") <= max_bucket)
-            .drop("_bc")
-        )
-    return buckets
-
-
 def _bucket_pair_join(buckets: DataFrame) -> DataFrame:
     l, r = buckets.alias("l"), buckets.alias("r")
     return (

@@ -37,6 +37,31 @@ def test_pip_join_broadcasts_cover_and_prunes_scan(spark, tmp_path):
         assert "html" not in ln and "text" not in ln and "url" not in ln
 
 
+def test_pip_join_geocodes_all_cover_resolutions_in_one_eval(spark):
+    """One geocode eval per plan: the admin layer's res-9 cover spans
+    resolutions 6-9, and the join still runs exactly two Python
+    evals, the fused per-resolution geocode and the boundary refine
+    (no second geocode from an inferred isnotnull on the key)."""
+    from geo_inference_spark.operators.pip_join import build_cover, pip_join
+
+    polys = synth_admin_polygons(64)
+    assert sorted(build_cover(polys, 9)["res"].unique()) == [6, 7, 8, 9]
+    out = pip_join(spark, pages_df(spark, 2000, partitions=4), polys, res=9)
+    assert plan_of(out).count("ArrowEvalPython") == 2, plan_of(out)
+
+
+def test_radius_join_geocodes_once(spark):
+    import pandas as pd
+
+    from geo_inference_spark.operators.knn import radius_join
+
+    queries = pd.DataFrame({"qid": [0, 1], "lat": [40.7, -20.0], "lon": [-74.0, 179.9]})
+    out = radius_join(
+        spark, pages_df(spark, 2000, partitions=4), queries, radius_km=300.0
+    )
+    assert plan_of(out).count("ArrowEvalPython") == 1, plan_of(out)
+
+
 def test_overlap_stitch_has_exactly_two_exchanges(spark):
     arr = np.random.RandomState(0).uniform(0, 255, size=(1, 16, 16))
     chunks, ny, nx = raster_to_chunks(spark, arr, 8)
