@@ -74,7 +74,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # --------------------------------------------------------------- geospatial
 
 def q_pip_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geocode -> cell cover broadcast join -> exact PIP -> count/area."""
+    """Geocode -> cover lookup -> exact PIP -> count/area, one Python pass."""
     docs = _docs_with_latlon(spark, sf_dir)
     return pages_per_area(spark, docs, admin_grid_polygons(), res=6).orderBy(
         "area_id"

@@ -5,11 +5,10 @@ via vectorized Arrow UDFs" (BASELINE.json). The UDFs are pandas_udf
 (Arrow-batched, no per-row Python); the cell math itself is the pure
 numpy in grid/hexgrid.py and grid/s2.py.
 
-``cell_keyed`` is the one entry point for batch operators (pip_join,
-knn_join, radius_join): it spreads a few-partition input, geocodes it
-at one or several resolutions and fences the join key. Only callers
-that cannot share it geocode with ``hex_cell_udf`` directly: a
-streaming frame has no ``.rdd`` to count partitions, and
+``cell_keyed`` spreads a few-partition input, geocodes it and fences
+the join key for knn_join and radius_join; pip_join geocodes inside
+its one mapInPandas pass. Other callers use ``hex_cell_udf`` directly:
+a streaming frame has no ``.rdd`` to count partitions, and
 write_pages_partitioned chooses its own partitioning.
 """
 
@@ -102,18 +101,12 @@ def spread(df: DataFrame) -> DataFrame:
 
 def cell_keyed(
     df: DataFrame,
-    res_list: list[int],
+    res: int,
     lat_col: str = "lat",
     lon_col: str = "lon",
     out: str = "cell",
 ) -> DataFrame:
-    """``spread(df)`` plus a non-null cell-id join key ``out``.
-
-    One resolution adds one column. Several resolutions explode one
-    row per resolution, each from its own ``hex_cell_udf`` column;
-    Spark evaluates all of them in ONE ArrowEvalPython node, so every
-    point crosses into Python once. Cell ids embed their resolution,
-    so keys at different resolutions never collide.
+    """``spread(df)`` plus a non-null cell-id join key ``out`` at ``res``.
 
     coalesce(..., 0) is the key fence: an inner join on a nullable
     Python-UDF key infers an isnotnull pre-join Filter that
@@ -121,7 +114,5 @@ def cell_keyed(
     UDF never returns null; non-finite coordinates get id 0, which is
     never a real cell (no flag bit), so they match no cover.
     """
-    lat, lon = F.col(lat_col), F.col(lon_col)
-    keys = [F.coalesce(hex_cell_udf(r)(lat, lon), F.lit(0)) for r in res_list]
-    key = keys[0] if len(keys) == 1 else F.explode(F.array(*keys))
+    key = F.coalesce(hex_cell_udf(res)(F.col(lat_col), F.col(lon_col)), F.lit(0))
     return spread(df).withColumn(out, key)

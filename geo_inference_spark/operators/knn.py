@@ -176,7 +176,7 @@ def _keyed_points(
             F.col(id_col).alias("id"), F.col(lat_col).alias("lat"),
             F.col(lon_col).alias("lon"),
         ),
-        [res],
+        res,
     )
 
 

@@ -133,13 +133,12 @@ def _warm_python_workers(spark: SparkSession, cores: int) -> None:
 
     try:
         # CHAINED three-eval pipeline: a task holds one python worker
-        # PER eval node in its pipeline, so the deepest chains in the
-        # workload (geocode -> refine; forge -> extract -> decode = 3)
-        # need up to 3x cores workers concurrently — a pool of only
-        # `cores` forced waves of fresh forks (numpy import each) onto
-        # the first deep query (ps-measured: +32 workers on the first
-        # pages_per_area, +33 more on the first warc_pipeline). Warm
-        # the 3-deep shape once here.
+        # PER eval node in its pipeline, so the deepest chain in the
+        # workload (forge -> extract -> decode) needs up to 3x cores
+        # workers concurrently — a pool of only `cores` forced waves of
+        # fresh forks (numpy import each) onto the first deep query
+        # (ps-measured: +32 workers on the first pages_per_area, +33
+        # more on the first warc_pipeline). Warm the 3-deep shape once.
         spark.range(0, cores, 1, cores).mapInPandas(
             _warm, "id long"
         ).mapInPandas(_warm, "id long").mapInPandas(_warm, "id long").count()

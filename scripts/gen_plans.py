@@ -26,10 +26,12 @@ qs = e.queries()
 sections = []
 for name, note in [
     ("pip_count_per_area",
-     "Scan is pruned to the derivation columns; the cover table is\n"
-     "broadcast (BroadcastHashJoin, never a shuffle of the pages side);\n"
-     "aggregation is partial map-side before one small exchange on\n"
-     "area_id. At 10^12 rows the only data movement is the broadcast."),
+     "Scan is pruned to the derivation columns; geocode, cover lookup,\n"
+     "refine and a per-batch partial count run in ONE MapInPandas with\n"
+     "the prepared layer shipped in the task (no join); the partial\n"
+     "HashAggregate feeds one small exchange on area_id, the only data\n"
+     "movement at 10^12 rows. Exchange (3) is spread(): this one-file\n"
+     "input has fewer partitions than cores; a real table has none."),
     ("dedup_minhash_lsh",
      "r6 shape: band keys come from ONE ArrowEvalPython pass (hashlib\n"
      "md5, bit-identical to the SQL tree — parity-pinned) feeding a\n"

@@ -75,8 +75,13 @@ def test_pip_join_strtree_large_layer(spark):
     plan = pip_join(
         spark, pages, polys, res=6, keep_cols=("page_id",)
     ).select("page_id", "area_id")
-    # the plan must stay a broadcast hash join of the big side
-    assert "BroadcastHashJoin" in plan._jdf.queryExecution().executedPlan().toString()
+    # the big side never shuffles and never meets a nested loop: the
+    # pages generator and the one PIP pass are its only Python stages
+    ex = plan._jdf.queryExecution().executedPlan().toString()
+    assert ex.count("MapInPandas") == 2 and "ArrowEvalPython" not in ex, ex
+    assert "Exchange" not in ex, ex
+    for j in ("SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert j not in ex, ex
     got_rows = plan.collect()
     got = {(r["page_id"], r["area_id"]) for r in got_rows}
     assert len(got_rows) == len(got)
@@ -124,3 +129,122 @@ def test_pip_join_multipart_adaptive_res_no_double_count(spark):
     exp = brute_force_matches(pts, polys)
     assert got == exp
     assert len(exp) > 10
+
+
+def test_refine_paths_agree(monkeypatch):
+    """The STRtree refine and the per-area refine give the same answer
+    on every boundary candidate of the admin layer's res-9 cover."""
+    import pandas as pd
+
+    import geo_inference_spark.operators.pip_join as PJ
+    from geo_inference_spark.grid import hexgrid
+
+    polys = P.synth_admin_polygons(64)
+    cover = build_cover(polys, 9)
+    bnd = cover[cover["boundary"]]
+    pts = P.pages_pdf(np.arange(20_000, dtype=np.uint64))
+    lat, lon = pts["lat"].to_numpy(), pts["lon"].to_numpy()
+    # every (page, candidate area) pair in a boundary cell
+    cand = pd.concat([
+        pd.DataFrame({"i": np.arange(len(lat)), "cell": hexgrid.latlng_to_cell(lat, lon, r)})
+        .merge(bnd[bnd["res"] == r], on="cell")
+        for r in sorted(bnd["res"].unique())
+    ])
+    i = cand["i"].to_numpy()
+    x, y, a = lon[i], lat[i], cand["area_id"].to_numpy(np.int64)
+    monkeypatch.setattr(PJ, "_STRTREE_MIN_PARTS", 0)
+    tree = PJ._refine(polys)(x, y, a)
+    monkeypatch.setattr(PJ, "_STRTREE_MIN_PARTS", 10**9)
+    per_area = PJ._refine(polys)(x, y, a)
+    assert len(a) > 1000 and tree.any() and not tree.all()
+    np.testing.assert_array_equal(tree, per_area)
+
+
+def test_prepared_layer_memo(monkeypatch):
+    """Equal layer content is prepared once; a moved vertex, a changed
+    area_id or another res each get a new preparation; the memo stays
+    within its fixed size, oldest out."""
+    import geo_inference_spark.operators.pip_join as PJ
+    from geo_inference_spark.geom.wkb import polygon_to_wkb
+
+    monkeypatch.setattr(PJ, "_PREPARED", {})
+    real, calls = PJ.build_cover, []
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(PJ, "build_cover", counting)
+    base = P.synth_admin_polygons(64)
+    first = PJ._prepare(base, 8)
+    # an equal copy, and a column _prepare does not read, reuse it
+    assert PJ._prepare(P.synth_admin_polygons(64), 8) is first
+    assert PJ._prepare(base.assign(name="renamed"), 8) is first
+    assert len(calls) == 1
+
+    moved = base.copy()
+    rings = [r.copy() for r in next(iter_polygons(moved.at[0, "geom_wkb"]))]
+    rings[0][1, 0] += 1e-6
+    moved.at[0, "geom_wkb"] = polygon_to_wkb(rings)
+    relabeled = base.copy()
+    relabeled.loc[0, "area_id"] = 10_000
+    for layer, res in ((moved, 8), (relabeled, 8), (base, 7)):
+        n = len(calls)
+        assert PJ._prepare(layer, res) is not first
+        assert len(calls) == n + 1
+        assert len(PJ._PREPARED) <= PJ._PREPARED_MAX
+    PJ._prepare(base, 6)  # a fifth layer evicts the oldest (base, 8)
+    assert len(PJ._PREPARED) == PJ._PREPARED_MAX == 4
+    n = len(calls)
+    PJ._prepare(base, 8)
+    assert len(calls) == n + 1 and len(PJ._PREPARED) == 4
+
+
+def test_empty_layer_gives_empty_results_with_schema(spark):
+    from geo_inference_spark.operators.pip_join import pages_per_area
+
+    pages = P.pages_df(spark, 500, partitions=2).select("page_id", "lat", "lon")
+    empty = P.synth_admin_polygons(8).iloc[:0]
+    j = pip_join(spark, pages, empty, res=8)
+    assert j.dtypes == [
+        ("page_id", "bigint"), ("lat", "double"), ("lon", "double"),
+        ("area_id", "bigint"),
+    ]
+    assert j.count() == 0
+    c = pages_per_area(spark, pages, empty, res=8)
+    assert c.dtypes == [("area_id", "bigint"), ("cnt", "bigint")]
+    assert c.count() == 0
+
+
+def test_duplicate_area_ids_act_as_one_multipart_area(spark):
+    """Two rows with one area_id join like their merged MULTIPOLYGON:
+    a page inside both overlapping parts matches the area once."""
+    from geo_inference_spark.geom.wkb import multipolygon_to_wkb
+    from geo_inference_spark.operators.pip_join import pages_per_area
+
+    polys = P.synth_admin_polygons(64)
+    # areas 8 and 24 overlap where the pages are dense
+    dup = polys.copy()
+    dup.loc[dup["area_id"] == 24, "area_id"] = 8
+    parts = [
+        rings for w in polys.loc[polys["area_id"].isin([8, 24]), "geom_wkb"]
+        for rings in iter_polygons(w)
+    ]
+    merged = polys[polys["area_id"] != 24].copy()
+    merged.loc[merged["area_id"] == 8, "geom_wkb"] = multipolygon_to_wkb(parts)
+    pages = P.pages_df(spark, 4000, partitions=4)
+
+    def matches(layer):
+        rows = pip_join(spark, pages, layer, res=9, keep_cols=("page_id",)).collect()
+        return sorted((r["page_id"], r["area_id"]) for r in rows)
+
+    def counts(layer):
+        return dict(pages_per_area(spark, pages, layer, res=9).collect())
+
+    got = matches(dup)
+    assert got == matches(merged)
+    assert len(got) == len(set(got))
+    pts = P.pages_pdf(np.arange(4000, dtype=np.uint64))
+    assert set(got) == brute_force_matches(pts, merged)
+    assert counts(dup) == counts(merged)
+    assert counts(dup)[8] > 531  # more than either part alone

@@ -1,7 +1,7 @@
 """Physical-plan shape assertions — the scale properties the engine
 relies on must be visible in `explain`, not just hoped for:
 
-* the PIP join broadcasts the cover (never shuffles the pages side),
+* the PIP join is one Python pass that never shuffles the pages side,
 * the parquet scan is pruned to (lat, lon) for the count-per-area
   pipeline,
 * the LSH bucket join is a real equi-join (hashable keys),
@@ -21,33 +21,59 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_pip_join_broadcasts_cover_and_prunes_scan(spark, tmp_path):
+_BAD_JOINS = ("SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin")
+
+
+def test_pages_per_area_never_shuffles_pages_and_prunes_scan(spark, tmp_path):
     path = str(tmp_path / "pages")
     pages_df(spark, 2000, partitions=4).write.parquet(path)
     pq = spark.read.parquet(path)
     out = pages_per_area(spark, pq, synth_admin_polygons(16), res=8)
     plan = plan_of(out)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    lines = plan.splitlines()
+    # the pages side never shuffles: nothing between the scan and the
+    # one Python pass, and no join at all
+    m = [i for i, ln in enumerate(lines) if "MapInPandas" in ln]
+    assert len(m) == 1, plan
+    assert not any("Exchange" in ln for ln in lines[m[0]:]), plan
+    assert "ArrowEvalPython" not in plan
+    assert not any(j in plan for j in _BAD_JOINS), plan
+    # the one Exchange (on area_id) sits above the map-side partial agg
+    ex = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert len(ex) == 1, plan
+    assert "HashAggregate" in lines[ex[0] + 1], plan
+    assert "partial_sum" in lines[ex[0] + 1], plan
     # column pruning: the parquet scan must read only lat/lon
-    scan_lines = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+    scan_lines = [ln for ln in lines if "ReadSchema" in ln]
     assert scan_lines, plan
     for ln in scan_lines:
-        assert "lat" in ln and "lon" in ln
-        assert "html" not in ln and "text" not in ln and "url" not in ln
+        assert "ReadSchema: struct<lat:double,lon:double>" in ln, ln
 
 
-def test_pip_join_geocodes_all_cover_resolutions_in_one_eval(spark):
-    """One geocode eval per plan: the admin layer's res-9 cover spans
-    resolutions 6-9, and the join still runs exactly two Python
-    evals, the fused per-resolution geocode and the boundary refine
-    (no second geocode from an inferred isnotnull on the key)."""
+def test_pip_join_geocodes_all_cover_resolutions_in_one_eval(spark, tmp_path):
+    """One Python pass per plan: the admin layer's res-9 cover spans
+    resolutions 6-9, and the join is still exactly one MapInPandas
+    (geocode, cover lookup and refine) and no ArrowEvalPython."""
     from geo_inference_spark.operators.pip_join import build_cover, pip_join
 
     polys = synth_admin_polygons(64)
     assert sorted(build_cover(polys, 9)["res"].unique()) == [6, 7, 8, 9]
-    out = pip_join(spark, pages_df(spark, 2000, partitions=4), polys, res=9)
-    assert plan_of(out).count("ArrowEvalPython") == 2, plan_of(out)
+    path = str(tmp_path / "pages")
+    pages_df(spark, 2000, partitions=4).write.parquet(path)
+    plan = plan_of(pip_join(spark, spark.read.parquet(path), polys, res=9))
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("ArrowEvalPython") == 0, plan
+    assert "Exchange" not in plan, plan
+    assert not any(j in plan for j in _BAD_JOINS), plan
+
+
+def test_knn_keyed_points_geocode_once(spark):
+    """knn_join persists _keyed_points: its one geocode eval, with no
+    second one from an inferred isnotnull on the key."""
+    from geo_inference_spark.operators.knn import _keyed_points
+
+    pts = _keyed_points(pages_df(spark, 2000, partitions=4), "page_id", "lat", "lon", 7)
+    assert plan_of(pts).count("ArrowEvalPython") == 1, plan_of(pts)
 
 
 def test_radius_join_geocodes_once(spark):
