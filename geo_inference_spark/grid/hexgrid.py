@@ -85,12 +85,13 @@ def unpack(cell):
 def latlng_to_cell(lat, lng, res: int):
     """Vectorized (lat, lng) degrees -> int64 cell id at ``res``.
 
-    A non-finite lat or lng (NaN, null read as NaN, +-inf) has no
-    cell: its id is 0, which lacks the flag bit and so is never a
-    real cell."""
+    A point off the globe (|lat| > 90 or |lng| > 180, so also NaN,
+    null read as NaN and +-inf) has no cell: its id is 0, which lacks
+    the flag bit and so is never a real cell. Out-of-range
+    coordinates are rejected, not wrapped."""
     lat = np.asarray(lat, dtype=np.float64)
     lng = np.asarray(lng, dtype=np.float64)
-    ok = np.isfinite(lat) & np.isfinite(lng)
+    ok = (np.abs(lat) <= 90) & (np.abs(lng) <= 180)
     valid = bool(ok.all())
     if not valid:  # zero the bad rows so the int cast stays defined
         lat, lng = np.where(ok, lat, 0.0), np.where(ok, lng, 0.0)

@@ -111,8 +111,9 @@ def cell_keyed(
     coalesce(..., 0) is the key fence: an inner join on a nullable
     Python-UDF key infers an isnotnull pre-join Filter that
     materializes a SECOND ArrowEvalPython geocoding every point. The
-    UDF never returns null; non-finite coordinates get id 0, which is
-    never a real cell (no flag bit), so they match no cover.
+    UDF never returns null; non-finite or out-of-range coordinates get
+    id 0, which is never a real cell (no flag bit), so they match no
+    cover.
     """
     key = F.coalesce(hex_cell_udf(res)(F.col(lat_col), F.col(lon_col)), F.lit(0))
     return spread(df).withColumn(out, key)

@@ -181,11 +181,12 @@ def _keyed_points(
 
 
 def _check_queries(queries: pd.DataFrame) -> None:
-    """A query needs a finite lat and lon: a NaN one has no cell to
-    ring and no distance to rank by."""
-    ll = queries[["lat", "lon"]].to_numpy(dtype=np.float64)
-    if not np.isfinite(ll).all():
-        raise ValueError("queries need finite lat and lon")
+    """A query needs a finite, in-range lat and lon: a NaN or
+    off-globe one has no cell to ring and no distance to rank by."""
+    ll = np.abs(queries[["lat", "lon"]].to_numpy(dtype=np.float64))
+    if not (ll <= [90, 180]).all():
+        raise ValueError(
+            "queries need finite lat in [-90, 90] and lon in [-180, 180]")
 
 
 def knn_join(
@@ -280,8 +281,9 @@ def knn_join(
 
         def local_topk(batches):
             for pdf in batches:
-                # a point without finite coordinates has no distance
-                pdf = pdf[np.isfinite(pdf["lat"]) & np.isfinite(pdf["lon"])]
+                # a point off the globe (or NaN) has no cell, so no
+                # distance either: the same rule as latlng_to_cell
+                pdf = pdf[(pdf["lat"].abs() <= 90) & (pdf["lon"].abs() <= 180)]
                 if not len(pdf):
                     continue
                 ids = pdf["id"].to_numpy(np.int64)
@@ -377,7 +379,9 @@ def radius_join(
         fb = spark.createDataFrame(
             [(int(v),) for v in fallback], schema="qid long"
         )
-        parts.append(pts.crossJoin(F.broadcast(fb)))
+        # a point off the globe has no distance: latlng_to_cell's rule
+        on_globe = (F.abs("lat") <= 90) & (F.abs("lon") <= 180)
+        parts.append(pts.where(on_globe).crossJoin(F.broadcast(fb)))
     if not parts:  # empty query frame -> empty result (ADVICE r4)
         return spark.createDataFrame(
             [], schema="qid long, id long, dist_km double"

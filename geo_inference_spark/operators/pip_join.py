@@ -174,7 +174,7 @@ def _match(layer, lat: np.ndarray, lon: np.ndarray):
     """(point_idx, area_id) of each point inside an area of ``layer``."""
     (index, start, count, areas, boundary), res_list, refine = layer
     # a key per (resolution, point): ids embed their resolution, so
-    # never collide, and a non-finite point's id 0 matches nothing
+    # never collide, and an off-globe point's id 0 matches nothing
     keys = [hexgrid.latlng_to_cell(lat, lon, r) for r in res_list]
     j = index.get_indexer(np.concatenate([np.empty(0, np.int64), *keys]))
     k = np.flatnonzero(j >= 0)

@@ -1,6 +1,6 @@
 """Geocode entry points and the geo operators' coordinate contract:
-a point without finite coordinates gets cell id 0, matches nothing and
-changes no result; a query without them is rejected."""
+a point without finite, in-range coordinates gets cell id 0, matches
+nothing and changes no result; a query without them is rejected."""
 
 import warnings
 
@@ -20,10 +20,12 @@ def test_latlng_to_cell_non_finite_is_zero_without_warning():
     lat = rng.uniform(-80, 80, 64)
     lon = rng.uniform(-179, 179, 64)
     clean = hexgrid.latlng_to_cell(lat, lon, 9)
-    bad = np.array([0, 5, 17, 40])
+    # non-finite, then out of range: lon 200 is not wrapped, and a far
+    # lon or lat must not overflow into another resolution's id
+    bad = np.array([0, 5, 17, 40, 41, 42, 43, 44])
     lat_d, lon_d = lat.copy(), lon.copy()
-    lat_d[bad[:2]] = [np.nan, np.inf]
-    lon_d[bad[2:]] = [np.nan, -np.inf]
+    lat_d[bad] = [np.nan, np.inf, 1.0, 2.0, 0.0, 0.0, 1e30, 95.0]
+    lon_d[bad] = [3.0, 4.0, np.nan, -np.inf, 200.0, 1e12, 0.0, 0.0]
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         got = hexgrid.latlng_to_cell(lat_d, lon_d, 9)
@@ -52,13 +54,14 @@ def test_s2_cell_udf_matches_numpy(spark):
 
 
 def _with_bad_coordinates(spark, pages):
-    """``pages`` plus rows whose lat or lon is NaN, null or infinite,
-    in a partition of their own."""
+    """``pages`` plus rows whose lat or lon is NaN, null, infinite or
+    out of range, in a partition of their own."""
     nan, inf = float("nan"), float("inf")
     bad = spark.createDataFrame(
         [(10**9 + i, la, lo) for i, (la, lo) in enumerate([
             (nan, 10.0), (40.7, nan), (None, -74.0), (40.7, None),
             (None, None), (inf, 5.0), (nan, nan),
+            (0.0, 200.0), (0.0, 1e12), (1e30, 0.0), (95.0, 0.0),
         ])],
         schema="page_id long, lat double, lon double",
     )
@@ -70,6 +73,11 @@ QUERIES = pd.DataFrame({
     "lat": [40.7, -60.0, 10.0],
     "lon": [-74.0, 170.0, 10.0],
 })
+# plus a polar query: the (95, 0) row lies 667 km (haversine) from it
+RADIUS_QUERIES = pd.concat(
+    [QUERIES, pd.DataFrame({"qid": [3], "lat": [89.0], "lon": [0.0]})],
+    ignore_index=True,
+)
 
 
 def test_non_finite_points_change_no_result(spark):
@@ -86,8 +94,9 @@ def test_non_finite_points_change_no_result(spark):
         got = knn_join(spark, df, QUERIES, k=5, res=7, **kw).toPandas()
         return got.sort_values(["qid", "rn"]).to_numpy().tolist()
 
-    def radius(df):
-        got = radius_join(spark, df, QUERIES, radius_km=700.0, res=6)
+    def radius(df, **kw):
+        got = radius_join(spark, df, RADIUS_QUERIES, radius_km=700.0, res=6,
+                          **kw)
         return sorted(map(tuple, got.toPandas().to_numpy().tolist()))
 
     exp_pip = pip(pages)
@@ -97,11 +106,16 @@ def test_non_finite_points_change_no_result(spark):
         exp = knn(pages, **kw)
         assert len(exp) == 5 * len(QUERIES)
         assert knn(dirty, **kw) == exp, kw
-    exp_radius = radius(pages)
-    assert exp_radius and radius(dirty) == exp_radius
+    # max_cover_cells=0 sends every query through the full-scan fallback
+    for kw in ({}, {"max_cover_cells": 0}):
+        exp_radius = radius(pages, **kw)
+        assert exp_radius and radius(dirty, **kw) == exp_radius, kw
 
 
-@pytest.mark.parametrize("lat,lon", [(np.nan, 0.0), (0.0, np.inf), (None, 1.0)])
+@pytest.mark.parametrize("lat,lon", [
+    (np.nan, 0.0), (0.0, np.inf), (None, 1.0),
+    (0.0, 200.0), (0.0, 1e12), (1e30, 0.0), (95.0, 0.0),
+])
 def test_non_finite_query_is_rejected(spark, lat, lon):
     pages = pages_df(spark, 100, partitions=2)
     queries = pd.DataFrame({"qid": [0, 1], "lat": [1.0, lat], "lon": [2.0, lon]})

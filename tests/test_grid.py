@@ -108,3 +108,18 @@ def test_children_partition_property():
     # aperture-7 grid: ~7 children on average
     assert 5.5 <= np.mean(counts) <= 8.5, np.mean(counts)
     assert (hg.grid_disk(cells[:3], 2) == hg.k_ring(cells[:3], 2)).all()
+
+
+def test_hex_ids_never_collide_across_resolutions():
+    # pip_join looks every cover resolution's keys up in ONE index:
+    # that is exact only while an id names its own resolution
+    rng = np.random.RandomState(5)
+    lat = np.concatenate([rng.uniform(-90, 90, 2000), [-90, 90, 0, 0]])
+    lng = np.concatenate([rng.uniform(-180, 180, 2000), [-180, 180, -180, 180]])
+    seen = {}
+    for res in range(hexgrid.MAX_RES + 1):
+        c = hexgrid.latlng_to_cell(lat, lng, res)
+        assert (hexgrid.unpack(c)[0] == res).all()
+        for other, ids in seen.items():
+            assert not np.isin(c, ids).any(), (res, other)
+        seen[res] = c
