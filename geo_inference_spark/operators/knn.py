@@ -1,32 +1,36 @@
-"""kNN over the pages table: H3-style k-ring expansion with
-distance-bounded refinement (north-star stage c; SURVEY.md §2.3 J2 /
-§2.6 O3).
+"""kNN and radius joins over a prepared point index: H3-style k-ring
+expansion with distance-bounded refinement (north-star stage c;
+SURVEY.md §2.3 J2 / §2.6 O3).
 
-Shape: the query set is small (broadcast side); the points table is
-the 100 TB side and is touched only by a broadcast hash semi-join on
-cell id — it never shuffles. Per round:
+The index, the (id, lat, lon, cell) projection of a points table, is
+geocoded and persisted once and probed by every later call on that
+table (a pre-built cell index, as in DGFIndex). ``_index`` memoizes it
+oldest-out per SparkContext, points plan (semanticHash, confirmed by
+sameResult), column names and res, unpersists what it evicts and
+re-persists an index whose cache was dropped. Like Spark's own cache
+it is keyed on the plan, not the data: after the source changes, call
+``spark.catalog.refreshByPath`` or ``spark.catalog.clearCache``.
 
-  1. expand each unsatisfied query's cell by k_ring(kr) -> candidate
-     cell set (broadcast);
-  2. points ⋈ candidates on cell (BroadcastHashJoin), planar degree
-     distance, Window(qid).orderBy(dist, id) row_number <= k;
-  3. a query is EXACT when it has k hits within the guarantee radius
-     g(kr) = 1.5*s*(kr+1) - 2*s — any point outside the ring is
-     provably farther (hex centers at hex-distance h are >= 1.5*s*h
-     apart, points at most one circumradius s from their center);
-  4. otherwise double kr and repeat with only the unsatisfied queries.
-
-The loop runs on the driver over the (small) query set; each round is
-one broadcast join + one window over the candidate subset. Distances
-are planar lon/lat degrees — the same plane the hexgrid lives on, and
-exactly expressible in the DuckDB oracle.
+A kNN round is one Spark job (two if its candidates are broadcast)
+that never shuffles the index: the (qid, cell) pairs of each
+unsatisfied query's k_ring(kr), inlined into the plan, pick the index
+points, whose dist (the SQL expression the oracle runs) is collected
+and ranked by (dist, id) on the driver. A query is EXACT when it has
+k hits within the guarantee radius g(kr) = 1.5*s*(kr+1) - 2*s — any
+point outside the ring is provably farther (hex centers at hex-distance
+h are >= 1.5*s*h apart, points at most one circumradius s from their
+center); otherwise kr doubles. Distances are planar lon/lat degrees
+(the hexgrid's own plane) or haversine km.
 """
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..grid import hexgrid
@@ -72,20 +76,16 @@ def radius_lon_halfwidth(radius_km: float, lat_far_deg: float) -> float:
     return float(np.degrees(2.0 * np.arcsin(x)))
 
 
-def _candidates_df(spark: SparkSession, queries: pd.DataFrame, res: int, kr: int):
+def _ring_cover(queries: pd.DataFrame, res: int, kr: int) -> pd.DataFrame:
     """(qid, cell) cover of each query's k-ring."""
     cells = hexgrid.latlng_to_cell(
         queries["lat"].to_numpy(), queries["lon"].to_numpy(), res
     )
     ring = hexgrid.k_ring(cells, kr)  # (nq, m)
-    nq, m = ring.shape
-    pdf = pd.DataFrame(
-        {
-            "qid": np.repeat(queries["qid"].to_numpy(), m),
-            "cell": ring.ravel(),
-        }
-    )
-    return spark.createDataFrame(pdf, schema="qid long, cell long")
+    return pd.DataFrame({
+        "qid": np.repeat(queries["qid"].to_numpy(), ring.shape[1]),
+        "cell": ring.ravel(),
+    })
 
 
 def _box_cover_cells(
@@ -122,8 +122,7 @@ def _box_cover_cells(
 
 
 def _box_cover(
-    spark: SparkSession, queries: pd.DataFrame, radius_km: float, res: int,
-    max_cover_cells: int,
+    queries: pd.DataFrame, radius_km: float, res: int, max_cover_cells: int
 ):
     """(qid, cell) spherical-box cover of every query whose cover has
     at most ``max_cover_cells`` cells (None if no query's does), and
@@ -140,31 +139,40 @@ def _box_cover(
                 "qid": np.full(cells.size, int(qid), np.int64),
                 "cell": cells,
             }))
-    if not frames:
-        return None, over
-    cover = spark.createDataFrame(
-        pd.concat(frames, ignore_index=True), schema="qid long, cell long"
-    )
-    return cover, over
+    return (pd.concat(frames, ignore_index=True) if frames else None), over
 
 
-def _qmeta(spark: SparkSession, queries: pd.DataFrame) -> DataFrame:
-    """(qid, qlat, qlon) of the queries, for the broadcast side."""
-    return spark.createDataFrame(
-        queries[["qid", "lat", "lon"]],
-        schema="qid long, lat double, lon double",
-    ).select("qid", F.col("lat").alias("qlat"), F.col("lon").alias("qlon"))
+# A probe inlines up to this many (qid, cell) pairs into its plan as SQL
+# literals (an IN filter and a cell -> queries map with linear lookup);
+# more go in a broadcast frame, which costs a Spark job of its own.
+_INLINE_PAIRS = 256
 
 
-def _topk(hits: DataFrame, k: int) -> DataFrame:
+def _probe(
+    spark: SparkSession, idx: DataFrame, cand: pd.DataFrame, queries: pd.DataFrame
+) -> DataFrame:
+    """(id, lat, lon, qid, qlat, qlon) of each index point in a (qid,
+    cell) pair of ``cand``: a narrow scan of the index."""
+    cand = cand.merge(queries[["qid", "lat", "lon"]], on="qid")
+    if len(cand) > _INLINE_PAIRS:  # columns are named by position
+        cand = spark.createDataFrame(
+            cand, schema="qid long, cell long, qlat double, qlon double")
+        return idx.join(F.broadcast(cand), on="cell")
+    q = "named_struct('qid', %dL, 'qlat', %rD, 'qlon', %rD)"
+    by = cand.groupby("cell")
+    m = ", ".join("%dL, array(%s)" % (c, ", ".join(
+        q % (int(i), float(a), float(o))
+        for i, a, o in zip(g["qid"], g["lat"], g["lon"]))) for c, g in by)
+    cells = ", ".join(f"{c}L" for c in by.groups)
+    return idx.where(F.expr(f"cell IN ({cells})")).select(
+        "id", "lat", "lon", F.expr(f"inline(map({m})[cell])"))
+
+
+def _topk(hits: pd.DataFrame, k: int) -> pd.DataFrame:
     """The k nearest hits per query, ties broken by id: (qid, id,
-    dist, rn)."""
-    w = Window.partitionBy("qid").orderBy("dist", "id")
-    return (
-        hits.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "id", "dist", "rn")
-    )
+    dist, rn), sorted by (qid, rn)."""
+    top = hits.sort_values(["qid", "dist", "id"]).groupby("qid").head(k)
+    return top.assign(rn=top.groupby("qid").cumcount() + 1)
 
 
 def _keyed_points(
@@ -178,6 +186,35 @@ def _keyed_points(
         ),
         res,
     )
+
+
+# The indexes of the last few (points plan, columns, res), oldest out.
+_INDEXES: dict[tuple, tuple] = {}
+_INDEXES_MAX = 4
+_INDEXES_LOCK = threading.Lock()
+
+
+def _index(
+    points: DataFrame, id_col: str, lat_col: str, lon_col: str, res: int
+) -> DataFrame:
+    """The persisted ``_keyed_points`` of ``points`` (module docstring)."""
+    plan = points._jdf.queryExecution().analyzed()
+    key = (points.sparkSession.sparkContext, plan.semanticHash(),
+           id_col, lat_col, lon_col, res)
+    with _INDEXES_LOCK:
+        hit = _INDEXES.get(key)
+        if hit is None or not hit[0].sameResult(plan):
+            # a hash collision replaces its entry, else the oldest goes
+            n_old = max(0, len(_INDEXES) + 1 - _INDEXES_MAX)
+            for old in [key] if hit else list(_INDEXES)[:n_old]:
+                if old[0]._jsc is not None:  # its context still runs
+                    _INDEXES[old][1].unpersist()
+                del _INDEXES[old]
+            hit = _INDEXES[key] = (
+                plan, _keyed_points(points, id_col, lat_col, lon_col, res))
+        if hit[1].storageLevel == StorageLevel.NONE:
+            hit[1].persist()
+        return hit[1]
 
 
 def _check_queries(queries: pd.DataFrame) -> None:
@@ -204,28 +241,34 @@ def knn_join(
     plan_sink: list | None = None,
     max_cover_cells: int = 200_000,
 ) -> DataFrame:
-    """Exact k nearest points per query -> (qid, id, dist, rn).
+    """Exact k nearest points per query -> (qid, id, dist, rn), in
+    (qid, rn) order.
 
     queries: pandas (qid, lat, lon). Ties broken by id for full
     determinism (matches the oracle's ORDER BY dist, id).
 
-    metric: 'planar' (lon/lat degrees — the hexgrid's own plane;
-    k-ring escalation with the planar guarantee radius) or 'haversine'
-    (great-circle km — the geodesically correct answer a real user
-    wants at high latitude; escalation = radius-doubling spherical-box
-    covers, whose guarantee is the radius ITSELF: every point within
-    r km is inside the cover, so >= k hits within r are exact. The box
-    splits at +-180 and degrades to the full latitude band at the
-    poles, so antimeridian and high-latitude queries stay on the
-    broadcast cover path instead of the fallback — round-4 upgrade
-    over the planar-guarantee -inf routing).
+    metric: 'planar' (lon/lat degrees; k-ring escalation with the
+    planar guarantee radius) or 'haversine' (great-circle km, the
+    geodesic answer at high latitude; escalation = radius-doubling
+    spherical-box covers, whose guarantee is the radius ITSELF: every
+    point within r km is in the cover, so >= k hits within r are
+    exact. The box splits at +-180 and widens to the full latitude
+    band at the poles, so such queries stay off the fallback).
+
+    Rounds and fallback probe the memoized index (module docstring)
+    with no Window and no shuffle and rank on the driver; a call
+    persists nothing and returns a local DataFrame of the ranked rows.
+    plan_sink, if given, gets each probe's executed plan.
     """
     _check_queries(queries)
     s = hexgrid.cell_size(res)
-    # persist the geocoded projection: every escalation round (and the
-    # brute-force fallback) re-reads it, and without the persist each
-    # action re-runs the geocode UDF over the full table
-    pts = _keyed_points(points, id_col, lat_col, lon_col, res).persist()
+    idx = _index(points, id_col, lat_col, lon_col, res)
+
+    def ranked(hits: DataFrame) -> pd.DataFrame:
+        hits = hits.select("qid", "id", _dist_col(metric).alias("dist"))
+        if plan_sink is not None:  # tests pin the plan shapes
+            plan_sink.append(hits._jdf.queryExecution().executedPlan().toString())
+        return _topk(hits.toPandas(), k)
 
     remaining = queries[["qid", "lat", "lon"]].copy()
     results: list = []
@@ -235,28 +278,21 @@ def knn_join(
         if remaining.empty:
             break
         if metric == "planar":
-            cand = _candidates_df(spark, remaining, res, kr)
+            cand = _ring_cover(remaining, res, kr)
         else:
             # a query over the cap gets no cover this round and
             # survives to the fallback
-            cand, _ = _box_cover(spark, remaining, r_km, res, max_cover_cells)
+            cand, _ = _box_cover(remaining, r_km, res, max_cover_cells)
             if cand is None:
                 break  # every remaining cover explodes: fallback
-        hits = (
-            pts.join(F.broadcast(cand), on="cell")
-            .join(F.broadcast(_qmeta(spark, remaining)), on="qid")
-            .withColumn("dist", _dist_col(metric))
-        )
-        got = _topk(hits, k).toPandas()
+        got = ranked(_probe(spark, idx, cand, remaining))
         guarantee = (
             1.5 * s * (kr + 1) - 2.0 * s if metric == "planar" else r_km
         )
-        done_ids = []
-        for qid, grp in got.groupby("qid"):
-            if len(grp) >= k and grp["dist"].max() <= guarantee:
-                done_ids.append(qid)
-                results.append(grp)
-        remaining = remaining[~remaining["qid"].isin(done_ids)]
+        g = got.groupby("qid")["dist"].agg(["size", "max"])
+        done = g.index[(g["size"] >= k) & (g["max"] <= guarantee)]
+        results.append(got[got["qid"].isin(done)])
+        remaining = remaining[~remaining["qid"].isin(done)]
         kr *= 2
         r_km *= 2.0
     # NOT a for/else: the fallback must also run when the loop BREAKS
@@ -267,14 +303,13 @@ def knn_join(
         # final fallback for stragglers (rare: queries in
         # near-empty regions / antimeridian / polar cap). Bounded,
         # not a crossJoin (VERDICT r2 #8): ONE mapInPandas pass
-        # over the slim persisted projection emits, per query, the
-        # partition's local top-k PLUS every row within an epsilon
-        # of the k-th distance (ADVICE r3: a fixed +8 margin breaks
-        # if >8 candidates tie at the cut with ulp-level numpy/SQL
+        # over the index emits, per query, the partition's local
+        # top-k PLUS every row within an epsilon of the k-th
+        # distance (ADVICE r3: a fixed +8 margin breaks if >8
+        # candidates tie at the cut with ulp-level numpy/SQL
         # divergence; the epsilon band is exact for ANY tie width
         # since numpy-vs-SQL divergence is ulps, below 1e-6 rel).
-        # The final ordering and the emitted dist come from the
-        # same SQL expression as the main path (oracle-identical).
+        # dist and the ranking are the rounds' (oracle-identical).
         qarr = remaining[["qid", "lat", "lon"]].to_numpy(dtype=np.float64)
         metric_ = metric
         k_ = k
@@ -314,31 +349,22 @@ def knn_join(
                         "id": ids[sel],
                         "lat": plat[sel],
                         "lon": plon[sel],
+                        "qlat": np.full(len(sel), qlat),
+                        "qlon": np.full(len(sel), qlon),
                     }))
                 if frames:
                     yield pd.concat(frames, ignore_index=True)
 
-        cand = pts.mapInPandas(
-            local_topk, "qid long, id long, lat double, lon double"
-        )
-        hits = cand.join(
-            F.broadcast(_qmeta(spark, remaining)), on="qid"
-        ).withColumn("dist", _dist_col(metric))
-        if plan_sink is not None:  # tests pin the fallback's shape
-            plan_sink.append(
-                hits._jdf.queryExecution().executedPlan().toString()
-            )
-        results.append(_topk(hits, k).toPandas())
+        results.append(ranked(idx.mapInPandas(
+            local_topk,
+            "qid long, id long, lat double, lon double, qlat double, qlon double",
+        )))
 
-    pts.unpersist()
     out = (
-        pd.concat(results, ignore_index=True)
-        if results
-        else pd.DataFrame(columns=["qid", "id", "dist", "rn"])
+        pd.concat(results, ignore_index=True).sort_values(["qid", "rn"])
+        if results else pd.DataFrame(columns=["qid", "id", "dist", "rn"])
     )
-    return spark.createDataFrame(
-        out, schema="qid long, id long, dist double, rn int"
-    ).orderBy("qid", "rn")
+    return spark.createDataFrame(out, schema="qid long, id long, dist double, rn int")
 
 
 def radius_join(
@@ -353,43 +379,32 @@ def radius_join(
     max_cover_cells: int = 200_000,
 ) -> DataFrame:
     """All points within ``radius_km`` (haversine) of each query —
-    the geofencing shape: (qid, id, dist_km).
+    the geofencing shape: (qid, id, dist_km), a lazy DataFrame.
 
-    Scale plan: the k-ring cell cover of each query's radius is
-    broadcast and the big side is touched only by a broadcast hash
-    semi-join on cell id (same never-shuffle contract as knn_join);
-    the exact haversine filter runs on the candidate cells only. The
-    cover is the cell set of the query's exact spherical bounding box
-    (|dlat| <= r/KM_PER_DEG; |dlam| <= radius_lon_halfwidth — tight
-    even at high latitude, unlike the planar ring guarantee), SPLIT AT
-    +-180 into two lon ranges when the box wraps — so antimeridian
-    geofences ride the same broadcast semi-join as interior queries
-    and never a nested-loop join (VERDICT r3 #6). Only queries whose
-    box cover explodes past ``max_cover_cells`` (polar caps /
-    globe-spanning radii) fall back to an exact full filter — still
-    one scan of the slim projection.
+    Each query's cell cover probes the memoized index (module
+    docstring), which never shuffles; the exact haversine filter runs
+    on the candidates only. The cover is the cell set of the query's
+    exact spherical bounding box (_box_cover_cells), split at +-180,
+    so antimeridian geofences ride the same probe as interior ones and
+    never a nested-loop join (VERDICT r3 #6). Only queries whose cover
+    explodes past ``max_cover_cells`` (polar caps, globe-spanning
+    radii) fall back to an exact filter over one scan of the index.
     """
     _check_queries(queries)
-    pts = _keyed_points(points, id_col, lat_col, lon_col, res)
-    cover, fallback = _box_cover(spark, queries, radius_km, res, max_cover_cells)
-    parts = []
-    if cover is not None:
-        parts.append(pts.join(F.broadcast(cover), on="cell"))
+    idx = _index(points, id_col, lat_col, lon_col, res)
+    cover, fallback = _box_cover(queries, radius_km, res, max_cover_cells)
+    parts = [] if cover is None else [_probe(spark, idx, cover, queries)]
     if fallback:
-        fb = spark.createDataFrame(
-            [(int(v),) for v in fallback], schema="qid long"
+        fb = spark.createDataFrame(  # columns are named by position
+            queries.loc[queries["qid"].isin(fallback), ["qid", "lat", "lon"]],
+            schema="qid long, qlat double, qlon double",
         )
         # a point off the globe has no distance: latlng_to_cell's rule
         on_globe = (F.abs("lat") <= 90) & (F.abs("lon") <= 180)
-        parts.append(pts.where(on_globe).crossJoin(F.broadcast(fb)))
+        parts.append(idx.where(on_globe).crossJoin(F.broadcast(fb)))
     if not parts:  # empty query frame -> empty result (ADVICE r4)
-        return spark.createDataFrame(
-            [], schema="qid long, id long, dist_km double"
-        )
-    out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    return (
-        out.join(F.broadcast(_qmeta(spark, queries)), on="qid")
-        .withColumn("dist", _dist_col("haversine"))
-        .filter(F.col("dist") <= float(radius_km))
-        .select("qid", "id", F.col("dist").alias("dist_km"))
-    )
+        return spark.createDataFrame([], schema="qid long, id long, dist_km double")
+    hits = [p.select("qid", "id", _dist_col("haversine").alias("dist_km"))
+            for p in parts]
+    out = hits[0] if len(hits) == 1 else hits[0].unionByName(hits[1])
+    return out.filter(F.col("dist_km") <= float(radius_km))

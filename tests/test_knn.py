@@ -1,8 +1,11 @@
 """kNN: k-ring expansion + distance-bounded refinement vs brute-force
 numpy oracle (SURVEY.md §2.6 O3)."""
 
+import uuid
+
 import numpy as np
 import pandas as pd
+import pytest
 
 from geo_inference_spark.operators.knn import knn_join
 from geo_inference_spark.sources.pages import pages_df
@@ -57,9 +60,9 @@ def test_knn_sparse_region_escalates(spark):
 
 def test_knn_fallback_is_bounded_not_crossjoin(spark):
     """VERDICT r2 #8: a straggler query must resolve through the
-    per-partition local-top-k fallback (mapInPandas + broadcast join
-    re-rank), never a crossJoin — and still be exact. max_rounds=0
-    forces every query straight into the fallback."""
+    per-partition local-top-k fallback (one mapInPandas over the index,
+    re-ranked on the driver), never a crossJoin — and still be exact.
+    max_rounds=0 forces every query straight into the fallback."""
     pages = pages_df(spark, 2000, partitions=8)
     pts = pages.select("page_id", "lat", "lon").toPandas()
     queries = pd.DataFrame(
@@ -80,7 +83,8 @@ def test_knn_fallback_is_bounded_not_crossjoin(spark):
     for plan in sink:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+        assert "MapInPandas" in plan and "InMemoryTableScan" in plan
+        assert "Exchange" not in plan  # neither a shuffle nor a broadcast
 
 
 def test_knn_haversine_antimeridian_and_pole_exact(spark):
@@ -242,3 +246,140 @@ def test_radius_join_matches_bruteforce_incl_antimeridian(spark):
         exp_ids = set(pts["page_id"].to_numpy()[d <= 800.0].tolist())
         got_ids = set(got[got.qid == q.qid]["id"].tolist())
         assert got_ids == exp_ids, (q.qid, len(got_ids), len(exp_ids))
+
+
+def _twin_points():
+    """Random points plus hand-placed ones around five queries: several
+    points tied at the k-th distance (exact duplicates for both metrics;
+    a symmetric cross for planar), an antimeridian and a polar query."""
+    rng = np.random.default_rng(5)
+    n = 1500
+    lat = rng.uniform(-80, 80, n)
+    lon = rng.uniform(-180, 180, n)
+    extra = [(10.0, 20.5), (10.0, 19.5), (10.5, 20.0), (9.5, 20.0)]  # cross
+    extra += [(-30.0, -60.0)] * 2 + [(-30.2, -60.1)] * 5  # 5 tie at k=4
+    extra += [(1.0, 179.97), (-1.0, -179.98), (0.5, -179.9), (0.0, 179.9)]
+    extra += [(89.95, 10.0), (89.9, -170.0), (89.97, 100.0), (88.0, 45.0)]
+    lat = np.r_[lat, [a for a, _ in extra]]
+    lon = np.r_[lon, [b for _, b in extra]]
+    # ids descend, so the tie-break by id is not the insertion order
+    ids = np.arange(len(lat), dtype=np.int64)[::-1] * 7
+    return pd.DataFrame({"page_id": ids, "lat": lat, "lon": lon})
+
+
+@pytest.mark.parametrize("metric", ["planar", "haversine"])
+def test_ring_path_and_fallback_agree(spark, metric):
+    """Twin paths: the indexed ring rounds and the full-scan fallback
+    (max_rounds=0) return identical (qid, id, dist, rn), ties at the
+    k-th distance included."""
+    pts = _twin_points()
+    pdf = spark.createDataFrame(pts, schema="page_id long, lat double, lon double")
+    queries = pd.DataFrame({
+        "qid": [0, 1, 2, 3, 4],
+        "lat": [10.0, -30.0, 0.0, 89.99, 35.0],
+        "lon": [20.0, -60.0, -179.99, 0.0, 139.0],
+    })
+    sink: list = []
+    ring = knn_join(spark, pdf, queries, k=4, res=6, metric=metric,
+                    plan_sink=sink).toPandas()
+    assert any("MapInPandas" not in p for p in sink), "no ring round ran"
+    fallback = knn_join(spark, pdf, queries, k=4, res=6, metric=metric,
+                        max_rounds=0).toPandas()
+    assert len(ring) == 4 * len(queries)
+    pd.testing.assert_frame_equal(ring, fallback)
+    # qid 1: two points on the query, then the two smallest ids of the
+    # five duplicates tied at the k-th distance
+    dups = pts[(pts["lat"] == -30.2) & (pts["lon"] == -60.1)]["page_id"]
+    assert ring[ring["qid"] == 1]["id"].tolist()[2:] == sorted(dups)[:2]
+    if metric == "planar":  # the cross: four points tied at 0.5
+        assert ring[ring["qid"] == 0]["dist"].tolist() == [0.5] * 4
+
+
+def _dense_query():
+    # a hot city of the synthetic pages: ring 1 answers k=5 at res 8
+    return pd.DataFrame({"qid": [0], "lat": [40.7], "lon": [-74.0]})
+
+
+def test_knn_index_is_built_once(spark, monkeypatch):
+    """A second knn_join on the same points frame geocodes nothing: no
+    _keyed_points call, and its round plan reads the cached index with
+    no ArrowEvalPython outside it."""
+    from geo_inference_spark.operators import knn
+
+    pages = pages_df(spark, 3000, partitions=4)
+    first = knn_join(spark, pages, _dense_query(), k=5).toPandas()
+    built = []
+    keyed = knn._keyed_points
+    monkeypatch.setattr(
+        knn, "_keyed_points", lambda *a: built.append(a) or keyed(*a))
+    sink: list = []
+    second = knn_join(spark, pages, _dense_query(), k=5, plan_sink=sink)
+    pd.testing.assert_frame_equal(second.toPandas(), first)
+    assert not built
+    assert len(sink) == 1, "a dense query is answered by ring 1"
+    outside = sink[0].split("InMemoryRelation")[0]
+    assert "InMemoryTableScan" in outside, sink[0]
+    assert "ArrowEvalPython" not in outside, sink[0]
+
+
+def test_dense_knn_runs_at_most_two_jobs(spark):
+    """A dense single query, the caller's toPandas included, is one
+    probe job and one collect of the local result."""
+    sc = spark.sparkContext
+    pages = pages_df(spark, 3000, partitions=4)
+    knn_join(spark, pages, _dense_query(), k=5).toPandas()  # builds the index
+    group = f"dense-knn-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "dense kNN")
+    try:
+        got = knn_join(spark, pages, _dense_query(), k=5).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(got) == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_same_shape_frames_never_share_an_index(spark):
+    pts = _twin_points()
+    moved = pts.assign(lat=pts["lat"] * 0.5, lon=pts["lon"] * 0.5)
+    queries = pd.DataFrame({"qid": [0, 1], "lat": [10.0, -20.0], "lon": [20.0, 100.0]})
+    for p in (pts, moved, pts):
+        df = spark.createDataFrame(p, schema="page_id long, lat double, lon double")
+        got = knn_join(spark, df, queries, k=3, res=6).toPandas()
+        exp = brute_force(p, queries, 3)
+        for qid, grp in got.groupby("qid"):
+            assert list(grp["id"]) == [i for i, _ in exp[int(qid)]], qid
+
+
+def test_index_survives_clear_cache(spark):
+    from pyspark import StorageLevel
+
+    from geo_inference_spark.operators import knn
+
+    pages = pages_df(spark, 2500, partitions=4)
+    pts = pages.select("page_id", "lat", "lon").toPandas()
+    queries = pd.DataFrame({"qid": [0, 1], "lat": [40.7, -60.0], "lon": [-74.0, 170.0]})
+    exp = brute_force(pts, queries, 4)
+    knn_join(spark, pages, queries, k=4, res=7).toPandas()
+    idx = knn._index(pages, "page_id", "lat", "lon", 7)
+    spark.catalog.clearCache()
+    assert idx.storageLevel == StorageLevel.NONE
+    got = knn_join(spark, pages, queries, k=4, res=7).toPandas()
+    for qid, grp in got.groupby("qid"):
+        assert list(grp["id"]) == [i for i, _ in exp[int(qid)]], qid
+    assert idx.storageLevel != StorageLevel.NONE  # persisted again
+    assert knn._index(pages, "page_id", "lat", "lon", 7) is idx
+
+
+def test_evicted_index_is_unpersisted(spark):
+    from pyspark import StorageLevel
+
+    from geo_inference_spark.operators import knn
+
+    frames = [pages_df(spark, 200 + i, partitions=2) for i in range(knn._INDEXES_MAX + 1)]
+    first = knn._index(frames[0], "page_id", "lat", "lon", 6)
+    assert first.storageLevel != StorageLevel.NONE
+    for f in frames[1:]:
+        knn._index(f, "page_id", "lat", "lon", 6)
+    assert first.storageLevel == StorageLevel.NONE
+    assert all(idx is not first for _, idx in knn._INDEXES.values())
