@@ -57,6 +57,11 @@ _STATS_T = StructType(
         # one flattened exterior ring per polygon part (COCO allows
         # multi-part segmentation as a list of flat coordinate lists)
         StructField("ext_flat", ArrayType(ArrayType(DoubleType()))),
+        # geo-space bounds, for the image-overlap filter
+        StructField("gminx", DoubleType()),
+        StructField("gminy", DoubleType()),
+        StructField("gmaxx", DoubleType()),
+        StructField("gmaxy", DoubleType()),
     ]
 )
 
@@ -70,9 +75,16 @@ def _apply_affine(rings, m):
     return out
 
 
+def _union_bounds(polys):
+    bnds = [bounds_of_rings(rings) for rings in polys]
+    return (min(b[0] for b in bnds), min(b[1] for b in bnds),
+            max(b[2] for b in bnds), max(b[3] for b in bnds))
+
+
 def _geom_stats_udf(transform, width: int, height: int):
     """WKB (geo coords) -> px geometry + every scalar the annotation
-    formats need, in one Arrow batch pass."""
+    formats need and the geo bounds the overlap filter needs, in one
+    Arrow batch pass (one WKB parse per polygon)."""
     inv = affine_to_shapely_list(invert_affine(transform))
     w, h = float(width), float(height)
 
@@ -85,11 +97,7 @@ def _geom_stats_udf(transform, width: int, height: int):
             px_polys = [_apply_affine(rings, inv) for rings in polys]
             # multi-part geometry: union of part bounds, sum of part
             # areas/intersections, one segmentation ring per part
-            bnds = [bounds_of_rings(p) for p in px_polys]
-            minx = min(b0[0] for b0 in bnds)
-            miny = min(b0[1] for b0 in bnds)
-            maxx = max(b0[2] for b0 in bnds)
-            maxy = max(b0[3] for b0 in bnds)
+            minx, miny, maxx, maxy = _union_bounds(px_polys)
             area = sum(polygon_area(p) for p in px_polys)
             inter = sum(clip_polygon_rect(p, 0.0, 0.0, w, h) for p in px_polys)
             ext = [p[0].ravel().tolist() for p in px_polys]
@@ -98,12 +106,16 @@ def _geom_stats_udf(transform, width: int, height: int):
                 if len(px_polys) == 1
                 else multipolygon_to_wkb(px_polys)
             )
-            rows.append((out_wkb, minx, miny, maxx, maxy, area, inter, ext))
+            rows.append((out_wkb, minx, miny, maxx, maxy, area, inter, ext,
+                         *_union_bounds(polys)))
         return pd.DataFrame(
             rows, columns=[f.name for f in _STATS_T.fields]
         )
 
-    return stats
+    # marked nondeterministic so the optimizer cannot push a filter on
+    # its fields below it as a second copy of the UDF: one eval, one
+    # WKB parse per polygon
+    return stats.asNondeterministic()
 
 
 def _with_px_stats(
@@ -118,49 +130,15 @@ def _with_px_stats(
     ys = [d * x + e * y + f for x in (0, width) for y in (0, height)]
     gminx, gmaxx, gminy, gmaxy = min(xs), max(xs), min(ys), max(ys)
 
-    bounds_udf = _geo_bounds_udf()
-    df = polygons.withColumn("_gb", bounds_udf(F.col("geom_wkb"))).filter(
+    stats = _geom_stats_udf(transform, width, height)
+    return polygons.withColumn("_st", stats(F.col("geom_wkb"))).filter(
         ~(
-            (F.col("_gb.maxx") < F.lit(gminx))
-            | (F.col("_gb.minx") > F.lit(gmaxx))
-            | (F.col("_gb.maxy") < F.lit(gminy))
-            | (F.col("_gb.miny") > F.lit(gmaxy))
+            (F.col("_st.gmaxx") < F.lit(gminx))
+            | (F.col("_st.gminx") > F.lit(gmaxx))
+            | (F.col("_st.gmaxy") < F.lit(gminy))
+            | (F.col("_st.gminy") > F.lit(gmaxy))
         )
-    ).drop("_gb")
-    return df.withColumn(
-        "_st", _geom_stats_udf(transform, width, height)(F.col("geom_wkb"))
     )
-
-
-_BOUNDS_T = StructType(
-    [
-        StructField("minx", DoubleType()),
-        StructField("miny", DoubleType()),
-        StructField("maxx", DoubleType()),
-        StructField("maxy", DoubleType()),
-    ]
-)
-
-
-def _geo_bounds_udf():
-    @F.pandas_udf(_BOUNDS_T)
-    def geo_bounds(wkb: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in wkb:
-            kind, payload = parse_wkb(bytes(b))
-            polys = [payload] if kind == "polygon" else payload
-            bnds = [bounds_of_rings(rings) for rings in polys]
-            rows.append(
-                (
-                    min(x[0] for x in bnds),
-                    min(x[1] for x in bnds),
-                    max(x[2] for x in bnds),
-                    max(x[3] for x in bnds),
-                )
-            )
-        return pd.DataFrame(rows, columns=["minx", "miny", "maxx", "maxy"])
-
-    return geo_bounds
 
 
 def polygons_to_px(

@@ -42,8 +42,10 @@ def hex_cell_sql(
 
     Bit-identical to hexgrid.latlng_to_cell: same float64 operation
     order; Spark ``bround`` == DuckDB ``round_even(x, 0)`` == numpy
-    rint (round-half-even). Parity is property-tested over millions of
-    points (tests/test_grid.py).
+    rint (round-half-even). A point off the globe (also NaN, +-inf
+    and null) is id 0 in all three. tests/test_grid.py pins the
+    three-way parity on seeded points, round-half-even ties, the
+    poles and +-180 degrees.
     """
     # NB: bare decimal literals are DECIMAL in Spark SQL — the string
     # cast keeps constants exact float64 so results are bit-identical
@@ -76,7 +78,13 @@ def hex_cell_sql(
     off = 1 << 27
     res_shift = shl.format(x=f"cast({res} as bigint)", n=56)
     q_shift = shl.format(x=f"({q} + {off})", n=28)
-    return f"({flag_lit} | {res_shift} | {q_shift} | ({r} + {off}))"
+    cell = f"({flag_lit} | {res_shift} | {q_shift} | ({r} + {off}))"
+    # NaN compares above every number in both dialects, and null
+    # fails the test too: neither reaches the bigint casts
+    return (
+        f"(case when abs({lat_col}) <= 90 and abs({lon_col}) <= 180"
+        f" then {cell} else 0 end)"
+    )
 
 
 def s2_cell_udf(level: int):

@@ -2,23 +2,26 @@
 
 The reference polygonizes the fully assembled mask in one process
 (utils/polygon.py:51-63). Distributed, a component may span tiles, so
-the pipeline splits the work by what is local vs global:
+the pipeline splits the work by what is local vs global. Every local
+component is named by its SEED, its first global row-major pixel
+``(gy << 32) + gx``: unique across tiles, and the minimum seed of a
+merged component is its ``poly_id``.
 
   mask tiles (ty, tx, s x s uint8)
-    -> mapInPandas  per-tile facts (ONE pass, one long schema):
-         kind 0  local component (lid, value, global seed pixel)
+    -> mapInPandas  per-tile facts (ONE pass, one long schema, every
+       row keyed by the seed ``nid`` of its local component):
          kind 1  boundary edge in GLOBAL pixel coords
          kind 2  border-strip cell (axis, border line, index, value)
     -> border cells self-join on the shared border key: equal values
        across a border => the two local components are one global one
-    -> connected components over the BORDER graph only (never the
-       full O(#components) node set — that driver union-find was the
-       round-1 scale-killer #2): union-find on the collected
-       perimeter-sized graph when small, distributed hash-min label
-       propagation + pointer jumping (O(log diameter) rounds) above
-       a measured edge-count threshold
-    -> (tile, lid) -> gid map joined onto edges (broadcast when the
-       component count is small, shuffle join otherwise)
+    -> border_labels over the BORDER graph only (never the full
+       O(#components) node set — that driver union-find was the
+       round-1 scale-killer #2): numpy label propagation on the
+       collected perimeter-sized graph when small, distributed hash-min
+       label propagation + pointer jumping (O(log diameter) rounds)
+       above a measured edge-count threshold; gid = min seed
+    -> edges left-join the labels, gid = coalesce(gid, nid): a
+       component that touches no border is its own global component
     -> SHUFFLE groupBy(gid): reversed duplicate edge pairs (the two
        sides of an internal tile border) cancel; the surviving edge
        set is EXACTLY the global boundary-edge set, so ring chaining,
@@ -31,6 +34,8 @@ crossing tile borders.
 """
 
 from __future__ import annotations
+
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -48,44 +53,45 @@ from ..raster.polygonize import (
     transform_rings,
 )
 
-FACTS_SCHEMA = (
-    "ty int, tx int, kind tinyint, lid long, value double, "
-    "a long, b long, c long, d long"
-)
+FACTS_SCHEMA = "kind tinyint, nid long, value double, a long, b long, c long, d long"
 POLY_SCHEMA = "poly_id long, value double, area double, geom_wkb binary"
+
+# border graphs up to this many edges are labeled on the driver (one
+# Arrow collect of perimeter-sized data); larger ones distributed
+CC_DRIVER_EDGES = 5_000_000
+# distributed label propagation rounds before giving up: pointer
+# jumping needs O(log diameter) of them
+CC_MAX_ROUNDS = 64
 
 
 def tile_facts(pdf_iter, stride: int):
-    """Per-tile local pass: components, global-coord edges, border
-    strips. Fully vectorized — no per-edge Python (a 512x512 tile has
-    O(10^5) boundary edges; the loops this replaces were the per-tile
-    hot spot)."""
+    """Per-tile local pass: global-coord edges and border strips, each
+    keyed by its local component's seed. Fully vectorized — no
+    per-edge Python (a 512x512 tile has O(10^5) boundary edges; the
+    loops this replaces were the per-tile hot spot)."""
     s = stride
-    cols = ["ty", "tx", "kind", "lid", "value", "a", "b", "c", "d"]
     for pdf in pdf_iter:
         frames = []
         for r in pdf.itertuples():
             ty, tx = int(r.ty), int(r.tx)
             m = np.frombuffer(r.mask, dtype=np.uint8).reshape(s, s)
+            # label == flat index of the component's first pixel, so
+            # its global seed follows from the tile origin
             lab = label_components(m)
             ox, oy = tx * s, ty * s
             flat_val = m.ravel().astype(np.float64)
 
-            # kind 0: component seeds (label == first pixel flat index)
-            lids = np.unique(lab[lab >= 0])
-            if len(lids):
-                seeds = (oy + lids // s) * (1 << 32) + (ox + lids % s)
-                frames.append(
-                    _facts_frame(ty, tx, 0, lids, flat_val[lids],
-                                 seeds, 0, 0, 0, cols)
-                )
+            def seed(lid):
+                lid = np.asarray(lid, dtype=np.int64)
+                return ((oy + lid // s) << 32) + (ox + lid % s)
+
             # kind 1: boundary edges in global pixel coords
             e = boundary_edges(lab)  # (n, 5): label, x0, y0, x1, y1
             if len(e):
                 frames.append(
-                    _facts_frame(ty, tx, 1, e[:, 0], flat_val[e[:, 0]],
+                    _facts_frame(1, seed(e[:, 0]), flat_val[e[:, 0]],
                                  e[:, 1] + ox, e[:, 2] + oy,
-                                 e[:, 3] + ox, e[:, 4] + oy, cols)
+                                 e[:, 3] + ox, e[:, 4] + oy)
                 )
             # kind 2: border strips — vertical borders (axis 0) keyed
             # by (line=x/s, global row), horizontal (axis 1) by
@@ -99,69 +105,45 @@ def tile_facts(pdf_iter, stride: int):
                 fg = np.nonzero(blids >= 0)[0]
                 if len(fg):
                     frames.append(
-                        _facts_frame(ty, tx, 2, blids[fg],
+                        _facts_frame(2, seed(blids[fg]),
                                      vals[fg].astype(np.float64),
-                                     axis, line, idx_base + fg, 0, cols)
+                                     axis, line, idx_base + fg, 0)
                     )
         if frames:
             yield pd.concat(frames, ignore_index=True)
         else:
-            yield _facts_frame(0, 0, 0, np.empty(0, np.int64),
-                               np.empty(0), 0, 0, 0, 0, cols)
+            yield _facts_frame(0, np.empty(0, np.int64), np.empty(0),
+                               0, 0, 0, 0)
 
 
-def _facts_frame(ty, tx, kind, lid, value, a, b, c, d, cols) -> pd.DataFrame:
-    n = len(lid)
+def _facts_frame(kind, nid, value, a, b, c, d) -> pd.DataFrame:
+    n = len(nid)
     full = lambda v: np.full(n, v, dtype=np.int64) if np.isscalar(v) else np.asarray(v, dtype=np.int64)  # noqa: E731
     return pd.DataFrame(
         {
-            "ty": np.full(n, ty, dtype=np.int32),
-            "tx": np.full(n, tx, dtype=np.int32),
             "kind": np.full(n, kind, dtype=np.int8),
-            "lid": np.asarray(lid, dtype=np.int64),
+            "nid": np.asarray(nid, dtype=np.int64),
             "value": np.asarray(value, dtype=np.float64),
             "a": full(a), "b": full(b), "c": full(c), "d": full(d),
-        },
-        columns=cols,
+        }
     )
 
 
-def _pack_nid(ty, tx, lid):
-    """(ty, tx, lid) -> one 63-bit node id (ty, tx < 2^21, lid < 2^21
-    i.e. stride <= 1448)."""
-    return (
-        F.shiftleft(
-            F.shiftleft(ty.cast("long"), 21) + tx.cast("long"), 21
-        )
-        + lid.cast("long")
-    )
+def border_labels(edges: DataFrame) -> DataFrame:
+    """Undirected edges (nid1, nid2) -> (nid, gid) for every node on
+    an edge, gid = min nid of its connected component.
 
-
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iters: int = 64,
-    driver_threshold: int = 5_000_000,
-    identity_seeds: bool = False,
-) -> DataFrame:
-    """CC over the BORDER graph: nodes (nid, seed), undirected edges
-    (nid1, nid2) -> (nid, gid) with gid = min seed of the component.
-
-    Only components that touch a tile border can merge, so the
-    algorithm never materializes the full node set (O(mask area /
-    component size)); it works on the border graph, which is
-    O(tile perimeter) — ~3 orders of magnitude smaller. Interior
-    components keep gid = seed via the final left join.
-
-    ``identity_seeds=True`` declares seed == nid for every node (the
-    dedup-clusters shape); the border nodes' seeds are then known from
-    the edge endpoints alone, so the driver regime skips the
-    nodes-join collect job entirely.
+    Only nodes on an edge are labeled. In polygonize those are the
+    components that touch a tile border — the only ones that can
+    merge — so the full node set (O(mask area / component size))
+    never enters; the border graph is O(tile perimeter), ~3 orders of
+    magnitude smaller. A node on no edge is its own component, gid =
+    nid, which the caller's left join and ``coalesce(gid, nid)``
+    supply.
 
     Two regimes by measured edge count:
-    * border graph fits the driver comfortably (< driver_threshold
-      edges) -> classic union-find on the collected border graph —
-      one collect of perimeter-sized data, microseconds of CPU;
+    * up to CC_DRIVER_EDGES -> one Arrow collect of the edges and
+      vectorized min-label propagation on the driver;
     * above it -> distributed hash-min label propagation with pointer
       jumping (the O(log diameter) doubling of Kiveris et al.'s star
       operations), on RDDs: Catalyst recomputes plan statistics
@@ -173,71 +155,52 @@ def connected_components(
       machinery — the classic reason iterative graph algorithms
       (GraphX, Pregel) live on RDDs.
     """
-    spark = nodes.sparkSession
+    spark = edges.sparkSession
     # regime gate: a cheap count() first — collecting threshold+1 Row
     # objects to decide the graph is "small" could itself OOM the
     # driver the gate exists to protect (ADVICE r2). edges is persisted
     # so the count's scan is reused by whichever branch runs next.
     edges = edges.persist()
     n_edges = edges.count()
-
-    if n_edges <= driver_threshold:
-        # Arrow toPandas instead of collect(): Row-object pickling of
-        # ~1M edges cost seconds; the Arrow path is one columnar
-        # transfer. Labeling is vectorized min-label propagation with
-        # pointer jumping (numpy, O(E) per round, O(log n) rounds) —
-        # the per-edge Python union-find loop was the driver hot spot.
-        ep = edges.toPandas()
-        edges.unpersist()
-        e1 = ep.iloc[:, 0].to_numpy(np.int64)
-        e2 = ep.iloc[:, 1].to_numpy(np.int64)
-        ids = np.unique(np.concatenate([e1, e2]))
-        if identity_seeds:
-            bn_arr, bseed_arr = ids, ids
+    try:
+        if n_edges <= CC_DRIVER_EDGES:
+            labels = _labels_on_driver(edges.toPandas())
         else:
-            bdf = spark.createDataFrame(
-                pd.DataFrame(
-                    {"nid": ids if len(ids) else np.array([-1], np.int64)}
-                )
-            )
-            bs = nodes.join(bdf, "nid").toPandas()
-            bn_arr = bs["nid"].to_numpy(np.int64)
-            bseed_arr = bs["seed"].to_numpy(np.int64)
-        m = len(ids)
-        a = np.searchsorted(ids, e1)
-        b = np.searchsorted(ids, e2)
-        lbl = np.arange(m, dtype=np.int64)
-        while True:
-            new = lbl.copy()
-            mn = np.minimum(lbl[a], lbl[b])
-            np.minimum.at(new, a, mn)
-            np.minimum.at(new, b, mn)
-            while True:  # pointer jumping to the round's fixpoint
-                nn = new[new]
-                if np.array_equal(nn, new):
-                    break
-                new = nn
-            if np.array_equal(new, lbl):
-                break
-            lbl = new
-        # gid = min seed over each component's border nodes
-        bn = bn_arr
-        bseed = bseed_arr
-        bidx = np.searchsorted(ids, bn)
-        comp_min = np.full(m, np.iinfo(np.int64).max, dtype=np.int64)
-        np.minimum.at(comp_min, lbl[bidx], bseed)
-        mapping = pd.DataFrame(
-            {"nid": bn, "lbl": comp_min[lbl[bidx]]}
-            if len(bn)
-            else {"nid": np.array([-1], np.int64),
-                  "lbl": np.array([-1], np.int64)}
-        )
-        gids = spark.createDataFrame(mapping, schema="nid long, lbl long")
-        return nodes.join(gids, "nid", "left").select(
-            "nid", F.coalesce(F.col("lbl"), F.col("seed")).alias("gid")
-        )
+            labels = _labels_distributed(edges, n_edges)
+        return spark.createDataFrame(labels, schema="nid long, gid long")
+    finally:
+        edges.unpersist()
 
-    # big regime: the count above also sizes the partitioning
+
+def _labels_on_driver(ep: pd.DataFrame) -> pd.DataFrame:
+    """Arrow toPandas instead of collect(): Row-object pickling of ~1M
+    edges cost seconds. Labeling is vectorized min-label propagation
+    with pointer jumping (numpy, O(E) per round, O(log n) rounds) — the
+    per-edge Python union-find loop was the driver hot spot."""
+    e1 = ep.iloc[:, 0].to_numpy(np.int64)
+    e2 = ep.iloc[:, 1].to_numpy(np.int64)
+    ids = np.unique(np.concatenate([e1, e2]))
+    a = np.searchsorted(ids, e1)
+    b = np.searchsorted(ids, e2)
+    lbl = np.arange(len(ids), dtype=np.int64)
+    while True:
+        new = lbl.copy()
+        mn = np.minimum(lbl[a], lbl[b])
+        np.minimum.at(new, a, mn)
+        np.minimum.at(new, b, mn)
+        while True:  # pointer jumping to the round's fixpoint
+            nn = new[new]
+            if np.array_equal(nn, new):
+                break
+            new = nn
+        if np.array_equal(new, lbl):
+            break
+        lbl = new
+    # ids is sorted, so a component's min index is its min nid
+    return pd.DataFrame({"nid": ids, "gid": ids[lbl]})
+
+
+def _labels_distributed(edges: DataFrame, n_edges: int):
     # partition count sized to the border graph, NOT inherited from
     # upstream — every Python-RDD task costs a worker round-trip, so
     # a tiny graph on many partitions is pure overhead
@@ -246,32 +209,20 @@ def connected_components(
     both = (
         e.union(e.map(lambda kv: (kv[1], kv[0]))).distinct(p).cache()
     )
-    if identity_seeds:  # seed == nid: no nodes join needed
-        labels = both.keys().distinct(p).map(lambda n: (n, n)).cache()
-    else:
-        border = both.keys().distinct(p).map(lambda n: (n, None))
-        labels = (
-            nodes.rdd.map(lambda r: (r[0], r[1]))
-            .join(border, p)
-            .mapValues(lambda v: v[0])
-            .cache()
-        )
+    labels = both.keys().distinct(p).map(lambda n: (n, n)).cache()
     labels.localCheckpoint()
-    seeds = labels.map(lambda kv: (kv[1], kv[0])).cache()  # seed -> owner nid
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ROUNDS):
         # hash-min: min label over neighbors
         msgs = (
             both.join(labels, p)
             .map(lambda kv: (kv[1][0], kv[1][1]))
             .reduceByKey(min, p)
         )
-        # pointer jump: label of the node that OWNS my current label
+        # pointer jump: a label is a nid, so take that node's label
         jump = (
             labels.map(lambda kv: (kv[1], kv[0]))  # (lbl, nid)
-            .join(seeds, p)  # (lbl, (nid, onid))
-            .map(lambda kv: (kv[1][1], kv[1][0]))  # (onid, nid)
-            .join(labels, p)  # (onid, (nid, olbl))
-            .map(lambda kv: (kv[1][0], kv[1][1]))  # (nid, olbl)
+            .join(labels, p)  # (lbl, (nid, lbl's lbl))
+            .map(lambda kv: (kv[1][0], kv[1][1]))
         )
         # new label = min over (own, neighbor-min, jump) — msgs/jump
         # key sets are subsets of labels', so the union covers all
@@ -282,14 +233,17 @@ def connected_components(
         )
         labels = upd
         if changed == 0:
-            gids = spark.createDataFrame(
-                labels.map(lambda kv: (kv[0], kv[1])), schema="nid long, lbl long"
-            )
-            edges.unpersist()
-            return nodes.join(gids, "nid", "left").select(
-                "nid", F.coalesce(F.col("lbl"), F.col("seed")).alias("gid")
-            )
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iters} rounds")
+            return labels
+    raise RuntimeError(f"border_labels: no fixpoint in {CC_MAX_ROUNDS} rounds")
+
+
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """nodes (nid), undirected edges (nid1, nid2) -> (nid, gid) with
+    gid = min nid of the node's component: border_labels on the edges,
+    and every node on no edge is its own component."""
+    return nodes.join(border_labels(edges), "nid", "left").select(
+        "nid", F.coalesce(F.col("gid"), F.col("nid")).alias("gid")
+    )
 
 
 def polygonize_tiles(
@@ -300,7 +254,6 @@ def polygonize_tiles(
     min_area: float = 0.0,
     simplify: bool = False,
     tolerance: float = 1.0,
-    cc_driver_threshold: int = 5_000_000,
 ) -> DataFrame:
     """(ty, tx, mask) -> (poly_id, value, area, geom_wkb).
 
@@ -308,28 +261,17 @@ def polygonize_tiles(
     stable across any partitioning (O2 determinism).
     """
     s = stride
+    # the border self-join and the edge scan both read the facts: a
+    # lazy local checkpoint keeps the one tile pass's blocks for both,
+    # and unlike cache() it leaves no CacheManager entry behind, so a
+    # later call on the same tiles reads them again (the master is
+    # local, so no executor holding the blocks can be lost)
     facts = tiles.mapInPandas(
         lambda it: tile_facts(it, s), schema=FACTS_SCHEMA
-    ).cache()
-    # ONE eager pass fills the cache and counts components: without
-    # it the adj self-join's two exchange builds race the cold cache
-    # and each recomputes the full scan+stitch+facts upstream
-    # (event-log measured: two concurrent full-fill jobs), and the
-    # broadcast decision needed its own comps.count() job later.
-    kind_counts = {
-        int(r["kind"]): int(r["n"])
-        for r in facts.groupBy("kind")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    n_comps = kind_counts.get(0, 0)
-
-    comps = facts.filter(F.col("kind") == 0).select(
-        "ty", "tx", "lid", "value", F.col("a").alias("seed")
-    )
+    ).localCheckpoint(eager=False)
 
     borders = facts.filter(F.col("kind") == 2).select(
-        "ty", "tx", "lid", "value", "a", "b", "c"
+        "nid", "value", "a", "b", "c"
     )
     l, r = borders.alias("l"), borders.alias("r")
     adj = (
@@ -340,42 +282,29 @@ def polygonize_tiles(
                 F.col("l.b") == F.col("r.b"),
                 F.col("l.c") == F.col("r.c"),
                 F.col("l.value") == F.col("r.value"),
-                # strict ordering => each cross-tile pair once, no self-pairs
-                (F.col("l.ty") * 2097152 + F.col("l.tx"))
-                < (F.col("r.ty") * 2097152 + F.col("r.tx")),
+                # strict ordering => each cross-tile pair once, no
+                # self-pairs (two tiles' components never share a seed)
+                F.col("l.nid") < F.col("r.nid"),
             ],
         )
-        .select(
-            _pack_nid(F.col("l.ty"), F.col("l.tx"), F.col("l.lid")).alias("nid1"),
-            _pack_nid(F.col("r.ty"), F.col("r.tx"), F.col("r.lid")).alias("nid2"),
-        )
+        .select(F.col("l.nid").alias("nid1"), F.col("r.nid").alias("nid2"))
         .distinct()
     )
-
-    nodes = comps.withColumn(
-        "nid", _pack_nid(F.col("ty"), F.col("tx"), F.col("lid"))
+    tagged = (
+        facts.filter(F.col("kind") == 1)
+        .join(border_labels(adj), "nid", "left")
+        .select(
+            F.coalesce(F.col("gid"), F.col("nid")).alias("gid"),
+            "value", "a", "b", "c", "d",
+        )
     )
-    gids = connected_components(
-        nodes.select("nid", "seed"), adj, driver_threshold=cc_driver_threshold
-    )
-    map_df = nodes.join(gids, "nid").select("ty", "tx", "lid", "gid", "value")
-    # the map is O(#local components); broadcast it while that is
-    # small, fall back to a shuffle join on fragmented petabyte masks
-    # (n_comps comes from the eager kind-counts pass above)
-    if n_comps <= 2_000_000:
-        map_df = F.broadcast(map_df)
-
-    edges = facts.filter(F.col("kind") == 1).select(
-        "ty", "tx", "lid", "a", "b", "c", "d"
-    )
-    tagged = edges.join(map_df, on=["ty", "tx", "lid"])
 
     min_area_ = float(min_area)
     simplify_ = bool(simplify)
     tol_ = float(tolerance)
     t_ = tuple(float(x) for x in transform)
 
-    def build_polygon(key, pdf: pd.DataFrame):
+    def build_polygon(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
         e = pdf[["a", "b", "c", "d"]].to_numpy(dtype=np.int64)
         # cancel internal tile-border edges: an edge and its exact
         # reverse (emitted by the two adjacent tiles) both vanish.

@@ -5,8 +5,9 @@ lineage + metrics". VERDICT r3 #5: committing ONE ledger row for the
 whole input makes resume all-or-nothing. Here the input is split into
 N deterministic hash units (or, for a bucket-partitioned pages table,
 its physical bucket values — then each unit's scan is pruned to 1/N of
-the files), each unit runs the same geocode -> broadcast PIP ->
-partial-agg plan on its slice, writes ``out/unit=<i>`` and commits its
+the files), each unit runs the same pages_per_area plan on its slice
+(one mapInPandas pass that geocodes, looks up the cover and refines,
+then a partial agg), writes ``out/unit=<i>`` and commits its
 own ledger row. A crashed run resumes via the ledger's anti-join and
 recomputes only unfinished units; per-area counts are additive over
 the disjoint slices, so the finalize step is a cheap sum over the tiny

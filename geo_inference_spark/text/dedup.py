@@ -565,15 +565,12 @@ def dedup_clusters(
         df, id_col, num_hashes, rows_per_band, k, col, max_bucket,
         sort=False,
     )
-    nodes = df.select(
-        F.col(id_col).cast("long").alias("nid"),
-        F.col(id_col).cast("long").alias("seed"),
-    )
+    nodes = df.select(F.col(id_col).cast("long").alias("nid"))
     edges = pairs.select(
         F.col("id1").alias("nid1"), F.col("id2").alias("nid2")
     )
     return (
-        connected_components(nodes, edges, identity_seeds=True)
+        connected_components(nodes, edges)
         .select(
             F.col("nid").alias("doc_id"), F.col("gid").alias("cluster_id")
         )

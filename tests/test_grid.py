@@ -1,6 +1,7 @@
 """Cell grid invariants: hexgrid (H3-shaped) and S2 (public spec)."""
 
 import numpy as np
+import pytest
 
 from geo_inference_spark.geom.core import points_in_polygon
 from geo_inference_spark.grid import hexgrid, s2
@@ -123,3 +124,84 @@ def test_hex_ids_never_collide_across_resolutions():
         for other, ids in seen.items():
             assert not np.isin(c, ids).any(), (res, other)
         seen[res] = c
+
+
+def _tie_points(res, rng):
+    """(lat, lng) pairs whose fractional axial coords land EXACTLY on a
+    .5 tie in float64, so round-half-even decides the cell: a tie in r
+    (set by lat alone), then ties in q and in y = -q - r (set by lng)."""
+    s = hexgrid.cell_size(res)
+    frac = hexgrid._xy_to_axial_frac
+
+    def tie_near(x0, f):
+        # the first float within 64 ulps of x0 where f is exactly k + .5
+        xs = x0 + np.arange(-64, 65) * np.spacing(x0)
+        hit = xs[np.mod(f(xs), 1.0) == 0.5]
+        return float(hit[0]) if len(hit) else None
+
+    kmax = int(90 / (1.5 * s) - 0.5)
+    mmax = max(1, int(70 / s))
+    out = []
+    for k in rng.randint(-kmax - 1, kmax + 1, 12):
+        lat = tie_near((k + 0.5) * 1.5 * s, lambda v: frac(0.0, v, s)[1])
+        if lat is None:
+            continue
+        out.append((lat, float(rng.uniform(-170, 170))))
+        rf = frac(0.0, lat, s)[1]
+        m = rng.randint(-mmax, mmax) + 0.5
+        for q0, f in ((m, lambda v: frac(v, lat, s)[0]),
+                      (-m - rf, lambda v: -frac(v, lat, s)[0] - rf)):
+            lng = tie_near((q0 * s + lat / 3.0) / (hexgrid.SQRT3 / 3.0), f)
+            if lng is not None and abs(lng) <= 180:
+                out.append((lat, lng))
+    return out
+
+
+@pytest.mark.parametrize("res", [0, 5, 7, 9, 10])
+def test_hex_cell_sql_twins_match_latlng_to_cell(spark, res):
+    """hex_cell_sql in Spark (F.expr) and in DuckDB (dialect='duck')
+    equal hexgrid.latlng_to_cell bit for bit: seeded points, exact
+    round-half-even ties, the poles and +-180 degrees. Off-globe, NaN,
+    +-inf and null coordinates are id 0 in all three (a point with no
+    cell changes no PIP, kNN or radius result, so the SQL twin keeps
+    the same rule)."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from geo_inference_spark.operators.geocode import hex_cell_sql
+
+    rng = np.random.RandomState(100 + res)
+    n = 4000
+    pts = list(zip(rng.uniform(-90, 90, n).tolist(),
+                   rng.uniform(-180, 180, n).tolist()))
+    ties = _tie_points(res, rng)
+    assert len(ties) >= 6, ties  # the tie search found real ties
+    pts += ties
+    pts += [(90.0, 0.0), (-90.0, 0.0), (90.0, 180.0), (-90.0, -180.0),
+            (0.0, 180.0), (0.0, -180.0), (45.5, 180.0), (-45.5, -180.0)]
+    off = [(90.000001, 0.0), (-90.5, 10.0), (0.0, 180.000001),
+           (10.0, -181.0), (float("nan"), 0.0), (0.0, float("nan")),
+           (float("inf"), 0.0), (0.0, float("-inf")), (None, 1.0),
+           (1.0, None)]
+    pts += off
+    rows = [(i, lat, lng) for i, (lat, lng) in enumerate(pts)]
+    lat = np.array([np.nan if p[0] is None else p[0] for p in pts])
+    lng = np.array([np.nan if p[1] is None else p[1] for p in pts])
+    exp = hexgrid.latlng_to_cell(lat, lng, res)
+    assert (exp[-len(off):] == 0).all()
+
+    sdf = spark.createDataFrame(rows, "i long, lat double, lon double")
+    got_spark = np.array(
+        [r.cell for r in sdf.select("i", F.expr(hex_cell_sql(res)).alias("cell"))
+         .orderBy("i").collect()], dtype=np.int64,
+    )
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE pts (i BIGINT, lat DOUBLE, lon DOUBLE)")
+        con.executemany("INSERT INTO pts VALUES (?, ?, ?)", rows)
+        got_duck = np.array(
+            [c for (c,) in con.execute(
+                f"SELECT {hex_cell_sql(res, dialect='duck')} FROM pts ORDER BY i"
+            ).fetchall()], dtype=np.int64,
+        )
+    np.testing.assert_array_equal(got_spark, exp)
+    np.testing.assert_array_equal(got_duck, exp)

@@ -301,25 +301,15 @@ def test_py_band_keys_parity_with_sql_exprs(spark, docs):
         assert new.exceptAll(old).count() == 0
 
 
-def test_dedup_clusters_identity_seeds_big_regime_parity(spark):
-    """dedup_clusters declares identity seeds to CC (r6 optimization:
-    skips the nodes-join collect in the driver regime, the labels
-    init join in the RDD regime). Forcing driver_threshold=0 runs the
-    distributed regime on the same graph — both must agree exactly."""
+def test_dedup_clusters_identity_seeds_big_regime_parity(spark, monkeypatch):
+    """dedup_clusters' node ids are their own seeds (doc id = nid), the
+    same contract as polygonize's tile components. Forcing
+    CC_DRIVER_EDGES=0 runs the distributed regime on the same graph —
+    both must agree exactly."""
     import geo_inference_spark.operators.vectorize as V
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     small = [tuple(r) for r in DD.dedup_clusters(docs).collect()]
-    orig = V.connected_components
-
-    def forced(nodes, edges, max_iters=64, driver_threshold=5_000_000,
-               identity_seeds=False):
-        return orig(nodes, edges, max_iters, driver_threshold=0,
-                    identity_seeds=identity_seeds)
-
-    V.connected_components = forced
-    try:
-        big = [tuple(r) for r in DD.dedup_clusters(docs).collect()]
-    finally:
-        V.connected_components = orig
+    monkeypatch.setattr(V, "CC_DRIVER_EDGES", 0)
+    big = [tuple(r) for r in DD.dedup_clusters(docs).collect()]
     assert small == big

@@ -2,10 +2,13 @@
 pipelines vs hand-derived oracles (reference semantics:
 utils/polygon.py gdf_to_yolo / geojson2coco)."""
 
+import warnings
+
 import numpy as np
 import pandas as pd
 import pytest
 
+import geo_inference_spark.operators.vectorize as V
 from geo_inference_spark.geom.core import polygon_area
 from geo_inference_spark.geom.wkb import parse_wkb, polygon_to_wkb
 from geo_inference_spark.operators.annotations import (
@@ -208,11 +211,12 @@ def test_annotations_multipolygon_full_parts(spark):
     assert kind == "multipolygon" and len(parts) == 2
 
 
-def test_distributed_cc_snake_many_tiles(spark):
+def test_distributed_cc_snake_many_tiles(spark, monkeypatch):
     """A 1-px boustrophedon snake across a 16x16 tile grid (128x128
     mask): one component spanning ~every tile with a long graph
     diameter — exercises the distributed hash-min + pointer-jumping
     connected components (no driver union-find)."""
+    monkeypatch.setattr(V, "CC_DRIVER_EDGES", 0)
     mask = np.zeros((128, 128), dtype=np.uint8)
     for band in range(0, 128, 16):
         mask[band, :] = 1  # horizontal run
@@ -222,12 +226,52 @@ def test_distributed_cc_snake_many_tiles(spark):
             else:
                 mask[band : band + 17, 0] = 1  # left connector
     got = polys_of(
-        polygonize_tiles(
-            spark, tiles_of(spark, mask, 8), 8, cc_driver_threshold=0
-        )
+        polygonize_tiles(spark, tiles_of(spark, mask, 8), 8)
     )
     exp = mask_to_polygons(mask)
     assert len(got) == len(exp) == 1
     assert got[0][2] == polygon_area(exp[0][0])
     for gr, er in zip(got[0][0], exp[0][0]):
         np.testing.assert_array_equal(gr, er)
+
+
+def test_polygonize_reads_each_tile_once_per_call(spark):
+    """One facts pass per call: the border self-join and the edge scan
+    share it, and nothing an earlier call on the same tiles left
+    behind stands in for it."""
+    rng = np.random.RandomState(7)
+    mask = ((rng.rand(32, 32) > 0.4) * rng.randint(1, 3, size=(32, 32))).astype(
+        np.uint8
+    )
+    reads = spark.sparkContext.accumulator(0)
+
+    def counted(it):
+        for pdf in it:
+            reads.add(len(pdf))
+            yield pdf
+
+    base = tiles_of(spark, mask, 8)
+    tiles = base.mapInPandas(counted, schema=base.schema)
+    exp = mask_to_polygons(mask)
+    for _ in range(2):
+        reads.value = 0
+        got = polys_of(polygonize_tiles(spark, tiles, 8))
+        assert len(got) == len(exp)
+        assert reads.value == 16
+
+
+def test_polygonize_builds_without_user_warning(spark):
+    """build_polygon is fully type-hinted, so PySpark infers its
+    grouped-map eval type instead of warning that it cannot."""
+    tiles = tiles_of(spark, np.ones((8, 8), np.uint8), 4)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        polygonize_tiles(spark, tiles, 4)
+
+
+def test_yolo_annotations_parse_each_polygon_once(spark):
+    """The image-overlap filter reads the geo bounds from the same
+    stats UDF as the px geometry: one ArrowEvalPython in the plan."""
+    out = yolo_annotations(_poly_df(spark), TRANSFORM, W, H)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
