@@ -47,6 +47,8 @@ def multipolygon_to_wkb(polys: list[list[np.ndarray]]) -> bytes:
 def _read_ring(buf: memoryview, off: int) -> tuple[np.ndarray, int]:
     (n,) = struct.unpack_from("<I", buf, off)
     off += 4
+    if off + 16 * n > len(buf):
+        raise ValueError("truncated WKB")
     ring = np.frombuffer(buf, dtype="<f8", count=2 * n, offset=off).reshape(n, 2)
     return ring.astype(np.float64), off + 16 * n
 
@@ -67,9 +69,15 @@ def parse_wkb(wkb: bytes):
     """Parse WKB -> (kind, payload).
 
     kind: 'point' -> (x, y); 'polygon' -> list[ring];
-    'multipolygon' -> list[list[ring]].
+    'multipolygon' -> list[list[ring]]. Malformed bytes raise ValueError.
     """
-    buf = memoryview(wkb)
+    try:
+        return _parse(memoryview(wkb))
+    except struct.error:
+        raise ValueError("truncated WKB") from None
+
+
+def _parse(buf: memoryview):
     byte_order, gtype = struct.unpack_from("<BI", buf, 0)
     if byte_order != 1:
         raise ValueError("only little-endian WKB supported")

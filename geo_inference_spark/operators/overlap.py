@@ -27,7 +27,7 @@ output — a sparse variant would drop them and densify at the sink.
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Any, Callable
 
 import numpy as np
 import pandas as pd
@@ -114,7 +114,7 @@ def overlap_stitch(
         .select("py", "px", "dy", "dx", "chunk")
     )
 
-    def run_patch(key, pdf: pd.DataFrame):
+    def run_patch(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
         py, px = int(key[0]), int(key[1])
         quads = {
             (int(r.dy), int(r.dx)): bytes_to_np(r.chunk, (bands, s, s))
@@ -144,7 +144,7 @@ def overlap_stitch(
 
     frags = routed.groupBy("py", "px").applyInPandas(run_patch, FRAG_SCHEMA)
 
-    def reduce_cell(key, pdf: pd.DataFrame):
+    def reduce_cell(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
         acc = np.zeros((num_classes + 1, s, s))
         for b in pdf["frag"]:
             acc += bytes_to_np(b, (num_classes + 1, s, s))

@@ -30,9 +30,30 @@ from .geocode import spread
 
 
 def _parts(polygons_pdf: pd.DataFrame) -> list[tuple[int, list]]:
-    """(area_id, rings) of every polygon part of the layer."""
-    rows = zip(polygons_pdf["area_id"], polygons_pdf["geom_wkb"])
-    return [(int(aid), rings) for aid, wkb in rows for rings in iter_polygons(wkb)]
+    """(area_id, rings) of every polygon part of the layer, each ring
+    closed (an open ring gets its closing edge).
+
+    A row that is not a Polygon/MultiPolygon WKB, or has a polygon with
+    no rings, an empty ring or a non-finite coordinate, raises one
+    ValueError naming its area_id and the reason.
+    """
+    parts = []
+    for aid, wkb in zip(polygons_pdf["area_id"], polygons_pdf["geom_wkb"]):
+        try:
+            if wkb is None:
+                raise ValueError("geom_wkb is null")
+            for rings in iter_polygons(wkb):
+                if not rings or not all(len(r) for r in rings):
+                    raise ValueError("empty polygon or ring")
+                if not all(np.isfinite(r).all() for r in rings):
+                    raise ValueError("non-finite coordinate")
+                parts.append((int(aid), [
+                    r if (r[0] == r[-1]).all() else np.vstack([r, r[:1]])
+                    for r in rings
+                ]))
+        except ValueError as e:
+            raise ValueError(f"invalid polygon layer row area_id={aid}: {e}") from None
+    return parts
 
 
 def build_cover(
@@ -154,7 +175,8 @@ def _prepare(polygons_pdf: pd.DataFrame, res: int):
     """
     h = hashlib.blake2b(np.int64(res).tobytes(), digest_size=16)
     for aid, wkb in zip(polygons_pdf["area_id"], polygons_pdf["geom_wkb"]):
-        h.update(np.array([aid, len(wkb)], dtype=np.int64).tobytes() + bytes(wkb))
+        wkb = bytes(wkb or b"")  # a null row is rejected by _parts on a miss
+        h.update(np.array([aid, len(wkb)], dtype=np.int64).tobytes() + wkb)
     key = h.digest()
     with _PREPARED_LOCK:
         if key not in _PREPARED:
@@ -205,6 +227,14 @@ def pip_join(
     rows — same semantics as a spatial inner join. Rows sharing an
     area_id are one multipart area (a point in several of its parts
     matches once); an empty layer gives zero rows, same schema.
+
+    Inside is even-odd: a point is in a part when a ray from it crosses
+    the part's rings an odd number of times, so holes, self-intersecting
+    (bowtie) rings and overlapping rings follow that one rule, and an
+    open ring is read with its closing edge. A row whose geom_wkb is
+    not a valid Polygon/MultiPolygon raises ValueError on the driver,
+    naming its area_id and the reason.
+
     Every column of ``points`` crosses Arrow into Python, so
     keep_cols=None on a wide table sends html and text through it.
     """

@@ -5,6 +5,13 @@ cores-1 (/root/reference/geo_inference/geo_inference.py:189-197); the
 Spark analogue is local task slots + shuffle partitions, set here. The
 master is always ``local[cores]``: the driver JVM is the only JVM, and
 runs every task.
+
+Python workers start from ``geo_inference_spark.worker_daemon``, not
+``pyspark.daemon``. The workers import pyspark from ``pyspark.zip``;
+below Python 3.13, the ``importlib.invalidate_caches()`` pyspark runs
+before each task re-reads every zip archive on the path, which was
+most of a short task's ~200 ms fixed cost. The daemon module re-reads
+only an archive that changed (see its docstring).
 """
 
 from __future__ import annotations
@@ -12,6 +19,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# where the driver imported this package from (a directory, or the zip
+# of a --py-files submit): the worker daemon is imported from here,
+# before any task could add the package to the workers' path
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_heap() -> str:
@@ -37,7 +49,9 @@ def get_spark(
     ``cores`` defaults to $SPARK_GRAFT_CPUS or all cores. The driver
     heap defaults to half the host's memory, at most 24g;
     $SPARK_DRIVER_MEM overrides it. Adaptive execution and the Arrow
-    batch size are left at Spark's defaults.
+    batch size are left at Spark's defaults. ``extra_conf`` overrides
+    any setting here; ``{"spark.python.daemon.module": "pyspark.daemon"}``
+    restores the stock worker daemon.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -74,6 +88,8 @@ def get_spark(
                 "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m",
             ),
         )
+        .config("spark.python.daemon.module", "geo_inference_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -19,6 +19,8 @@
 
 from __future__ import annotations
 
+from typing import Any
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -293,7 +295,7 @@ def cosine_pairs(
         ),
     ).select("id", "v", "b", F.col("_t.i").alias("i"), F.col("_t.j").alias("j"))
 
-    def block_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def block_pairs(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
         # TILED matmul + conservative prefilter: materializing the full
         # block-pair cosine matrix and running the 4-temporary rounding
         # chain over it cost ~0.6 GB of allocation churn per task (13

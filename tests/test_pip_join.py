@@ -1,9 +1,11 @@
 """PIP join vs brute-force numpy oracle (generic irregular polygons)."""
 
 import numpy as np
+import pandas as pd
+import pytest
 
 from geo_inference_spark.geom.core import points_in_polygon
-from geo_inference_spark.geom.wkb import iter_polygons
+from geo_inference_spark.geom.wkb import iter_polygons, point_to_wkb, polygon_to_wkb
 from geo_inference_spark.operators.pip_join import build_cover, pip_join
 from geo_inference_spark.sources import pages as P
 
@@ -94,8 +96,6 @@ def test_pip_join_strtree_large_layer(spark):
 def test_pip_join_multipart_adaptive_res_no_double_count(spark):
     """A multipolygon whose parts would fit different adaptive cover
     resolutions must not double-count points (one res per area_id)."""
-    import pandas as pd
-
     from geo_inference_spark.geom.wkb import multipolygon_to_wkb
 
     def square(cx, cy, r):
@@ -134,8 +134,6 @@ def test_pip_join_multipart_adaptive_res_no_double_count(spark):
 def test_refine_paths_agree(monkeypatch):
     """The STRtree refine and the per-area refine give the same answer
     on every boundary candidate of the admin layer's res-9 cover."""
-    import pandas as pd
-
     import geo_inference_spark.operators.pip_join as PJ
     from geo_inference_spark.grid import hexgrid
 
@@ -165,7 +163,6 @@ def test_prepared_layer_memo(monkeypatch):
     area_id or another res each get a new preparation; the memo stays
     within its fixed size, oldest out."""
     import geo_inference_spark.operators.pip_join as PJ
-    from geo_inference_spark.geom.wkb import polygon_to_wkb
 
     monkeypatch.setattr(PJ, "_PREPARED", {})
     real, calls = PJ.build_cover, []
@@ -248,3 +245,47 @@ def test_duplicate_area_ids_act_as_one_multipart_area(spark):
     assert set(got) == brute_force_matches(pts, merged)
     assert counts(dup) == counts(merged)
     assert counts(dup)[8] > 531  # more than either part alone
+
+
+_SQUARE = np.array([[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]], float)
+
+
+@pytest.mark.parametrize("wkb, reason", [
+    (polygon_to_wkb([]), "empty polygon or ring"),
+    (polygon_to_wkb([np.zeros((0, 2))]), "empty polygon or ring"),
+    (polygon_to_wkb([_SQUARE])[:-8], "truncated WKB"),
+    (polygon_to_wkb([_SQUARE])[:2], "truncated WKB"),
+    (point_to_wkb(0.5, 0.5), "not a polygonal geometry"),
+    (polygon_to_wkb([np.where(_SQUARE == 1, np.nan, _SQUARE)]),
+     "non-finite coordinate"),
+    (None, "geom_wkb is null"),
+], ids=["no_rings", "empty_ring", "truncated", "two_bytes", "point",
+        "nan_vertex", "null"])
+def test_invalid_polygon_row_is_named(spark, wkb, reason):
+    """An invalid row fails the call on the driver with one ValueError
+    naming its area_id and the reason, before any Spark job."""
+    layer = pd.DataFrame({"area_id": [4, 5],
+                          "geom_wkb": [polygon_to_wkb([_SQUARE]), wkb]})
+    pages = P.pages_df(spark, 100, partitions=1)
+    with pytest.raises(ValueError, match=f"area_id=5: {reason}"):
+        pip_join(spark, pages, layer, res=8)
+
+
+def test_open_and_bowtie_rings_are_even_odd():
+    """An open ring reads as closed and a self-intersecting (bowtie)
+    ring keeps even-odd parity, at every cover resolution."""
+    import geo_inference_spark.operators.pip_join as PJ
+
+    rng = np.random.default_rng(3)
+    lon, lat = rng.uniform(-1, 2, 20_000), rng.uniform(-1, 2, 20_000)
+    bowtie = np.array([[0, 0], [1, 1], [1, 0], [0, 1], [0, 0]], float)
+    for ring in (_SQUARE, bowtie):
+        exp = points_in_polygon(lon, lat, [ring])
+        for rings in ([ring], [ring[:-1]]):
+            layer = pd.DataFrame({"area_id": [7], "geom_wkb": [polygon_to_wkb(rings)]})
+            for res in (5, 7):
+                i, a = PJ._match(PJ._prepare(layer, res), lat, lon)
+                got = np.zeros(len(lat), bool)
+                got[i] = True
+                np.testing.assert_array_equal(got, exp)
+                assert (a == 7).all()

@@ -8,6 +8,8 @@ relies on must be visible in `explain`, not just hoped for:
 * the overlap stitch has exactly two exchanges.
 """
 
+import warnings
+
 import numpy as np
 
 from geo_inference_spark.operators.overlap import overlap_stitch, raster_to_chunks
@@ -91,7 +93,10 @@ def test_radius_join_geocodes_once(spark):
 def test_overlap_stitch_has_exactly_two_exchanges(spark):
     arr = np.random.RandomState(0).uniform(0, 255, size=(1, 16, 16))
     chunks, ny, nx = raster_to_chunks(spark, arr, 8)
-    tiles = overlap_stitch(chunks, make_linear_model(2), 1, 8, ny, nx, 2)
+    # both grouped maps are fully type-hinted: no eval-type UserWarning
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        tiles = overlap_stitch(chunks, make_linear_model(2), 1, 8, ny, nx, 2)
     plan = plan_of(tiles)
     # two FlatMapGroupsInPandas, each fed by one Exchange
     assert plan.count("FlatMapGroupsInPandas") == 2
@@ -114,7 +119,9 @@ def test_cosine_pairs_triangle_plan(spark):
     from geo_inference_spark.text.similarity import cosine_pairs
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    out = cosine_pairs(emb, threshold=0.4, n_blocks=4)
+    with warnings.catch_warnings():  # block_pairs is fully type-hinted
+        warnings.simplefilter("error", UserWarning)
+        out = cosine_pairs(emb, threshold=0.4, n_blocks=4)
     plan = plan_of(out)
     assert "FlatMapGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
@@ -199,7 +206,7 @@ def test_jaccard_intersect_not_in_join_condition(spark):
     broadcast join condition, where it was evaluated 3x per probed
     pair inside a generated method big enough that HotSpot
     intermittently refused to JIT it (the measured 5 s vs 20-56 s
-    bimodality, r6). The rand() fence makes the projection
+    bimodality, r6). The one-element shuffle() fence makes the projection
     nondeterministic so the filter cannot be pushed through it; the
     intersect stays a single JVM expression (no Arrow ship of the
     per-pair array columns)."""
