@@ -1,6 +1,7 @@
 """Geocode entry points and the geo operators' coordinate contract:
 a point without finite, in-range coordinates gets cell id 0, matches
-nothing and changes no result; a query without them is rejected."""
+nothing and changes no result; a query without them, or one that
+repeats a qid, is rejected."""
 
 import warnings
 
@@ -106,20 +107,27 @@ def test_non_finite_points_change_no_result(spark):
         exp = knn(pages, **kw)
         assert len(exp) == 5 * len(QUERIES)
         assert knn(dirty, **kw) == exp, kw
-    # max_cover_cells=0 sends every query through the full-scan fallback
-    for kw in ({}, {"max_cover_cells": 0}):
+    # max_cover_cells=0 sends every query through the full-scan fallback;
+    # 20_000 sends only the polar one, so the probe and the scan union
+    for kw in ({}, {"max_cover_cells": 0}, {"max_cover_cells": 20_000}):
         exp_radius = radius(pages, **kw)
         assert exp_radius and radius(dirty, **kw) == exp_radius, kw
 
 
-@pytest.mark.parametrize("lat,lon", [
-    (np.nan, 0.0), (0.0, np.inf), (None, 1.0),
-    (0.0, 200.0), (0.0, 1e12), (1e30, 0.0), (95.0, 0.0),
+@pytest.mark.parametrize("qid,lat,lon,match", [
+    pytest.param(1, lat, lon, "finite", id=f"{lat}-{lon}") for lat, lon in [
+        (np.nan, 0.0), (0.0, np.inf), (None, 1.0),
+        (0.0, 200.0), (0.0, 1e12), (1e30, 0.0), (95.0, 0.0),
+    ]
+] + [
+    # a repeated qid paired each cell with both positions: kNN mixed
+    # the two answers, radius_join merged them under one qid
+    pytest.param(0, 51.5, -0.12, "repeat qid 0", id="duplicate-qid"),
 ])
-def test_non_finite_query_is_rejected(spark, lat, lon):
+def test_non_finite_query_is_rejected(spark, qid, lat, lon, match):
     pages = pages_df(spark, 100, partitions=2)
-    queries = pd.DataFrame({"qid": [0, 1], "lat": [1.0, lat], "lon": [2.0, lon]})
-    with pytest.raises(ValueError, match="finite"):
+    queries = pd.DataFrame({"qid": [0, qid], "lat": [1.0, lat], "lon": [2.0, lon]})
+    with pytest.raises(ValueError, match=match):
         knn_join(spark, pages, queries, k=3)
-    with pytest.raises(ValueError, match="finite"):
+    with pytest.raises(ValueError, match=match):
         radius_join(spark, pages, queries, radius_km=10.0)

@@ -1,13 +1,14 @@
 """kNN: k-ring expansion + distance-bounded refinement vs brute-force
 numpy oracle (SURVEY.md §2.6 O3)."""
 
+import re
 import uuid
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from geo_inference_spark.operators.knn import knn_join
+from geo_inference_spark.operators.knn import knn_join, radius_join
 from geo_inference_spark.sources.pages import pages_df
 
 
@@ -320,6 +321,43 @@ def test_knn_index_is_built_once(spark, monkeypatch):
     outside = sink[0].split("InMemoryRelation")[0]
     assert "InMemoryTableScan" in outside, sink[0]
     assert "ArrowEvalPython" not in outside, sink[0]
+    # the planar distance is still this expression, so dist is
+    # bit-identical to what every earlier version ranked by
+    dist = "SQRT((POWER((lon - qlon), 2.0) + POWER((lat - qlat), 2.0))) AS dist"
+    assert dist in re.sub(r"#\d+L?", "", outside), sink[0]
+
+
+def _compiles(spark) -> int:
+    """Whole-stage and expression classes this JVM has compiled."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_new_request_compiles_no_java(spark):
+    """A probe holds a request's cells, coordinates and radius by
+    reference, never as literals in generated code: once a request
+    kind has run, a request with a new ring, centre or radius_km
+    reuses the compiled classes. Values inlined as literals compiled
+    new classes on every request (3 for a planar ring, 2 for a new
+    radius_km)."""
+    pages = pages_df(spark, 3000, partitions=4)
+
+    def q(lat, lon):
+        return pd.DataFrame({"qid": [0], "lat": [lat], "lon": [lon]})
+
+    kinds = {
+        "planar": lambda lat, lon, r: knn_join(spark, pages, q(lat, lon), k=5),
+        "haversine": lambda lat, lon, r: knn_join(
+            spark, pages, q(lat, lon), k=5, metric="haversine"),
+        "radius": lambda lat, lon, r: radius_join(
+            spark, pages, q(lat, lon), radius_km=r),
+    }
+    for kind, run in kinds.items():
+        run(40.7, -74.0, 5.0).toPandas()  # the kind's first plan compiles
+        before = _compiles(spark)
+        got = run(40.72, -74.03, 7.5).toPandas()
+        assert len(got) >= 5, kind
+        assert _compiles(spark) == before, kind
 
 
 def test_dense_knn_runs_at_most_two_jobs(spark):
