@@ -12,7 +12,6 @@ import struct
 import numpy as np
 
 _POINT = 1
-_LINESTRING = 2
 _POLYGON = 3
 _MULTIPOLYGON = 6
 

@@ -319,7 +319,10 @@ def knn_join(
         # divergence; the epsilon band is exact for ANY tie width
         # since numpy-vs-SQL divergence is ulps, below 1e-6 rel).
         # dist and the ranking are the rounds' (oracle-identical).
-        qarr = remaining[["qid", "lat", "lon"]].to_numpy(dtype=np.float64)
+        # qids stay int64: through float64 a qid above 2^53 changes,
+        # and two such qids can merge into one
+        qids = remaining["qid"].to_numpy(np.int64)
+        qll = remaining[["lat", "lon"]].to_numpy(np.float64)
         metric_ = metric
         k_ = k
 
@@ -334,7 +337,7 @@ def knn_join(
                 plat = pdf["lat"].to_numpy(np.float64)
                 plon = pdf["lon"].to_numpy(np.float64)
                 frames = []
-                for qid, qlat, qlon in qarr:
+                for qid, (qlat, qlon) in zip(qids, qll):
                     if metric_ == "planar":
                         d = np.sqrt(
                             (plon - qlon) ** 2 + (plat - qlat) ** 2
@@ -354,7 +357,7 @@ def knn_join(
                     else:
                         sel = order
                     frames.append(pd.DataFrame({
-                        "qid": np.full(len(sel), int(qid), np.int64),
+                        "qid": np.full(len(sel), qid, np.int64),
                         "id": ids[sel],
                         "lat": plat[sel],
                         "lon": plon[sel],

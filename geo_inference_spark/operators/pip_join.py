@@ -1,13 +1,16 @@
 """Point-in-polygon join as one Arrow pass (north-star stage b).
 
 Replaces the reference's R-tree spatial semi-join
-(get_overlapping_subset, /root/reference/geo_inference/utils/
-geo_transforms.py:197-258) with the scalable Spark shape: the small
-polygon layer is prepared once on the driver (a per-area cell cover,
-cells labeled interior vs boundary, plus its exact refine) and ONE
-mapInPandas carrying it geocodes the pages per Arrow batch, looks the
-keys up in the cover and ray-casts only boundary matches. Pages cross
-into Python once and never shuffle; skew matters only in the
+(get_overlapping_subset in geo_inference/utils/geo_transforms.py)
+with the scalable Spark shape: the small polygon layer is prepared
+once on the driver (a per-area cell cover, cells labeled interior vs
+boundary, plus each part's rings and bbox) and ONE mapInPandas
+carrying it geocodes the pages per Arrow batch and looks the keys up
+in the cover. The cover's cell index is the join's spatial index: a
+lookup names the one area a boundary-cell point must be tested
+against, and the refine ray-casts it only against the parts of that
+area whose bbox holds it (the prepared-geometry prefilter). Pages
+cross into Python once and never shuffle; skew matters only in the
 downstream groupBy (AQE + optional salting, operators/salting.py).
 """
 
@@ -23,7 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..geom.core import bounds_of_rings, points_in_polygon
-from ..geom.strtree import STRtree
 from ..geom.wkb import iter_polygons
 from ..grid import hexgrid
 from .geocode import spread
@@ -102,56 +104,36 @@ def build_cover(
     )
 
 
-# above this many polygon parts the refine switches from the
-# per-area loop to STRtree bbox candidate lookup (north-star:
-# "broadcast prepared-geometry R-tree per partition")
-_STRTREE_MIN_PARTS = 64
-
-
 def _refine(polygons_pdf: pd.DataFrame):
     """Exact PIP for boundary-cell candidates, ``(x, y, area) -> bool``.
 
-    Small layers (admin areas): one vectorized ray-cast per area
-    present in the batch. Large layers (10^5-polygon AOI sets): a
-    packed STRtree over ALL part bboxes (geom/strtree.py — the Spark
-    form of the reference's gdf.sindex in get_overlapping_subset,
-    /root/reference/geo_inference/utils/geo_transforms.py:230-256)
-    turns the per-area scan into O(log #parts) candidate lookups,
-    then one vectorized ray-cast per candidate part.
+    Each candidate already carries the one area the cover lookup
+    found, so no second spatial index is built. One sort groups a
+    batch's candidates by area, by x within an area; each part of an
+    area then ray-casts only the candidates inside its bbox (a binary
+    search on x, a mask on y), so an area of many small parts pays a
+    search per part, not a pass over all its candidates per part.
     """
-    parts = _parts(polygons_pdf)
-    part_rings = [rings for _, rings in parts]
-    part_area_arr = np.array([aid for aid, _ in parts], dtype=np.int64)
-    use_tree = len(parts) > _STRTREE_MIN_PARTS
-    if use_tree:
-        tree = STRtree(np.array([bounds_of_rings(p) for p in part_rings]))
-    else:
-        parts_by_area: dict[int, list] = {}
-        for aid, rings in parts:
-            parts_by_area.setdefault(aid, []).append(rings)
+    parts_by_area: dict[int, list] = {}
+    for aid, rings in _parts(polygons_pdf):
+        parts_by_area.setdefault(aid, []).append((bounds_of_rings(rings), rings))
 
     def refine(x: np.ndarray, y: np.ndarray, a: np.ndarray) -> np.ndarray:
         res = np.zeros(len(x), dtype=bool)
-        if use_tree:
-            # degenerate point boxes -> (point_idx, part_idx) pairs
-            qi, pi = tree.query_many(np.stack([x, y, x, y], axis=1))
-            keep = part_area_arr[pi] == a[qi]
-            qi, pi = qi[keep], pi[keep]
-            # one vectorized ray-cast per candidate part
-            order = np.argsort(pi, kind="stable")
-            qi, pi = qi[order], pi[order]
-            starts = np.flatnonzero(np.diff(pi, prepend=-1))
-            ends = np.r_[starts[1:], len(pi)]
-            for s, e in zip(starts, ends):
-                idx = qi[s:e]
-                res[idx] |= points_in_polygon(x[idx], y[idx], part_rings[pi[s]])
-        else:
-            for aid in np.unique(a):
-                m = a == aid
-                hit = np.zeros(int(m.sum()), dtype=bool)
-                for rings in parts_by_area.get(int(aid), ()):
-                    hit |= points_in_polygon(x[m], y[m], rings)
-                res[m] = hit
+        order = np.lexsort((x, a))
+        xo = x[order]
+        aids, starts = np.unique(a[order], return_index=True)
+        ends = [*starts[1:].tolist(), len(a)]
+        for aid, s, e in zip(aids.tolist(), starts.tolist(), ends):
+            m, xs = order[s:e], xo[s:e]
+            for (x0, y0, x1, y1), rings in parts_by_area[aid]:
+                # inclusive on every side: a point on the bbox edge
+                # (a vertex, say) still reaches the ray-cast
+                idx = m[xs.searchsorted(x0, "left"):xs.searchsorted(x1, "right")]
+                yi = y[idx]
+                idx = idx[(yi >= y0) & (yi <= y1)]
+                if len(idx):
+                    res[idx] |= points_in_polygon(x[idx], y[idx], rings)
         return res
 
     return refine

@@ -1,4 +1,4 @@
-"""Skew handling: salted two-phase aggregation and hot-key joins.
+"""Skew handling: salted two-phase aggregation and top-k.
 
 CC pages concentrate in urban cells (the synthetic generator
 reproduces this: 70% of pages cluster around 8 hotspots), so
@@ -9,9 +9,6 @@ mitigations, made explicit (SURVEY.md §4 "custom Spark work #1"):
   (key, salt) partials, then re-aggregate by key. Two small shuffles
   instead of one skewed one; the first stage's partial rows are
   bounded by n x |keys|.
-* ``salted_broadcast_join`` — replicate the broadcast side n times so
-  a hot probe key fans out across n tasks (only needed when the probe
-  side must ALSO be repartitioned by key downstream).
 
 AQE's skew-join splitting (enabled in session.py) already handles
 shuffle-join skew at runtime; explicit salting is for grouped

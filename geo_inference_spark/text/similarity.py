@@ -33,7 +33,6 @@ _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0 as double),"
     " (acc, v) -> acc + v)"
 )
-_TO_D = "transform({a}, x -> cast(x as double))"
 
 
 _COS_UDF = None

@@ -272,11 +272,12 @@ def _twin_points():
 def test_ring_path_and_fallback_agree(spark, metric):
     """Twin paths: the indexed ring rounds and the full-scan fallback
     (max_rounds=0) return identical (qid, id, dist, rn), ties at the
-    k-th distance included."""
+    k-th distance included, and every qid unchanged up to int64 range
+    (2^53 + 3 and 2^53 + 4 are one float64)."""
     pts = _twin_points()
     pdf = spark.createDataFrame(pts, schema="page_id long, lat double, lon double")
     queries = pd.DataFrame({
-        "qid": [0, 1, 2, 3, 4],
+        "qid": [0, 1, 2**53 + 3, 2**53 + 4, 2**63 - 1],
         "lat": [10.0, -30.0, 0.0, 89.99, 35.0],
         "lon": [20.0, -60.0, -179.99, 0.0, 139.0],
     })
@@ -287,6 +288,7 @@ def test_ring_path_and_fallback_agree(spark, metric):
     fallback = knn_join(spark, pdf, queries, k=4, res=6, metric=metric,
                         max_rounds=0).toPandas()
     assert len(ring) == 4 * len(queries)
+    assert sorted(set(ring["qid"])) == queries["qid"].tolist()
     pd.testing.assert_frame_equal(ring, fallback)
     # qid 1: two points on the query, then the two smallest ids of the
     # five duplicates tied at the k-th distance

@@ -1,7 +1,8 @@
-"""Dead-code guard: every top-level function and class in
-``geo_inference_spark/`` is named somewhere in the repository's Python
-files besides its own definition — a caller, a test, a benchmark, or
-a re-export. Pure ``ast`` + text scan; needs no Spark.
+"""Dead-code guard: every top-level function, class and assigned name
+(dunders aside) in ``geo_inference_spark/`` is named somewhere in the
+repository's Python files besides its own definition — a caller, a
+reader, a test, a benchmark, or a re-export. Pure ``ast`` + text scan;
+needs no Spark.
 """
 
 import ast
@@ -32,7 +33,16 @@ def _top_level_defs():
             if isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
-                defs.append((node.name, f"{p.relative_to(ROOT)}:{node.lineno}"))
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [
+                    n.id for t in targets for n in ast.walk(t)
+                    if isinstance(n, ast.Name) and not n.id.startswith("__")
+                ]
+            else:
+                continue
+            defs += [(name, f"{p.relative_to(ROOT)}:{node.lineno}") for name in names]
     return defs
 
 

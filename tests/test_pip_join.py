@@ -69,9 +69,10 @@ def test_pip_join_grid_polygons(spark):
         assert exp[pid] == aid
 
 
-def test_pip_join_strtree_large_layer(spark):
-    """≥10k polygons flips the refine onto the STRtree path; result
-    must still equal brute force and stay duplicate-free."""
+def test_pip_join_10k_polygon_layer(spark):
+    """A 10k-polygon layer, each candidate refined against only its
+    own area's parts, must still equal brute force and stay
+    duplicate-free."""
     pages = P.pages_df(spark, 1500, partitions=4)
     polys = P.synth_admin_polygons(n_areas=10_000)
     plan = pip_join(
@@ -131,9 +132,23 @@ def test_pip_join_multipart_adaptive_res_no_double_count(spark):
     assert len(exp) > 10
 
 
-def test_refine_paths_agree(monkeypatch):
-    """The STRtree refine and the per-area refine give the same answer
-    on every boundary candidate of the admin layer's res-9 cover."""
+def _unfiltered_refine(polys, x, y, a):
+    """Reference refine: every candidate ray-cast against every part
+    of its area, no bbox filter."""
+    parts: dict[int, list] = {}
+    for aid, wkb in zip(polys["area_id"], polys["geom_wkb"]):
+        parts.setdefault(int(aid), []).extend(iter_polygons(wkb))
+    out = np.zeros(len(x), dtype=bool)
+    for aid in np.unique(a):
+        m = a == aid
+        for rings in parts.get(int(aid), ()):
+            out[m] |= points_in_polygon(x[m], y[m], rings)
+    return out
+
+
+def test_refine_matches_unfiltered_ray_cast():
+    """The refine equals the unfiltered reference on every boundary
+    candidate of the admin layer's res-9 cover."""
     import geo_inference_spark.operators.pip_join as PJ
     from geo_inference_spark.grid import hexgrid
 
@@ -150,12 +165,46 @@ def test_refine_paths_agree(monkeypatch):
     ])
     i = cand["i"].to_numpy()
     x, y, a = lon[i], lat[i], cand["area_id"].to_numpy(np.int64)
-    monkeypatch.setattr(PJ, "_STRTREE_MIN_PARTS", 0)
-    tree = PJ._refine(polys)(x, y, a)
-    monkeypatch.setattr(PJ, "_STRTREE_MIN_PARTS", 10**9)
-    per_area = PJ._refine(polys)(x, y, a)
-    assert len(a) > 1000 and tree.any() and not tree.all()
-    np.testing.assert_array_equal(tree, per_area)
+    got = PJ._refine(polys)(x, y, a)
+    assert len(a) > 1000 and got.any() and not got.all()
+    np.testing.assert_array_equal(got, _unfiltered_refine(polys, x, y, a))
+
+
+def test_refine_many_part_areas_on_part_edges():
+    """4 areas x 400 islands (touching squares and diamonds): points
+    exactly on part vertices, edges and bbox corners, each tested
+    against its own area and a neighbour's, refine as the unfiltered
+    reference does."""
+    import geo_inference_spark.operators.pip_join as PJ
+    from geo_inference_spark.geom.wkb import multipolygon_to_wkb
+
+    side = 40
+    islands, probes = [], []
+    for i in range(side):
+        for j in range(side):
+            cx, cy, h = i + 0.5, j + 0.5, 0.5
+            if (i + j) % 2:
+                ring = [[cx - h, cy - h], [cx + h, cy - h], [cx + h, cy + h], [cx - h, cy + h]]
+            else:
+                ring = [[cx, cy - h], [cx + h, cy], [cx, cy + h], [cx - h, cy]]
+            ring = np.array(ring + ring[:1], float)
+            islands.append(ring)
+            corners = [[cx - h, cy - h], [cx + h, cy - h], [cx + h, cy + h], [cx - h, cy + h]]
+            mids = (ring[:-1] + ring[1:]) / 2
+            probes.append(np.vstack([ring[:-1], mids, corners, [[cx, cy]]]))
+    area = np.arange(side * side) % 4  # neighbours in j differ in area
+    polys = pd.DataFrame({"area_id": np.arange(4), "geom_wkb": [
+        multipolygon_to_wkb([[r] for r, a in zip(islands, area) if a == k])
+        for k in range(4)]})
+    xy = np.vstack(probes)
+    own = np.repeat(area, [len(p) for p in probes])
+    x, y = np.tile(xy[:, 0], 2), np.tile(xy[:, 1], 2)
+    a = np.concatenate([own, (own + 1) % 4])
+    exp = _unfiltered_refine(polys, x, y, a)
+    # points on a part's lower-left bbox edges are inside by the
+    # ray-cast convention, so an exclusive bbox test would drop them
+    assert exp[(x == np.floor(x)) & (a == np.tile(own, 2))].any() and not exp.all()
+    np.testing.assert_array_equal(PJ._refine(polys)(x, y, a), exp)
 
 
 def test_prepared_layer_memo(monkeypatch):
