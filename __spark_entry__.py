@@ -82,7 +82,8 @@ def q_pip_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN via k-ring expansion + distance-bounded refinement."""
+    """kNN via one cell cover from the index's per-cell counts +
+    distance-bounded refinement."""
     import pandas as pd
 
     docs = _docs_with_latlon(spark, sf_dir)
@@ -94,9 +95,9 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geodesic kNN: same k-ring expansion, haversine km distance with
-    a cos(lat)-adjusted guarantee radius (planar degrees inflate
-    east-west distance ~1.7x at 55 deg latitude)."""
+    """Geodesic kNN: the same one cell cover, haversine km distance
+    (planar degrees inflate east-west distance ~1.7x at 55 deg
+    latitude)."""
     import pandas as pd
 
     docs = _docs_with_latlon(spark, sf_dir)
@@ -131,8 +132,8 @@ def _knn_geo_oracle() -> str:
 
 def q_radius_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geofence counts: docs within 1500 haversine km of each fixed
-    center, via the broadcast k-ring cell-cover semi-join (the big
-    side never shuffles) + exact haversine filter on candidates."""
+    center, via a probe of the cells that can hold such a doc (the
+    big side never shuffles) + exact haversine filter on candidates."""
     import pandas as pd
 
     from geo_inference_spark.operators.knn import radius_join

@@ -106,12 +106,6 @@ _BETA = (
 )
 
 
-def utm_zone_epsg(lon: float, lat: float) -> int:
-    """EPSG code of the UTM zone containing (lon, lat)."""
-    zone = int((lon + 180.0) // 6.0) % 60 + 1
-    return (32600 if lat >= 0 else 32700) + zone
-
-
 def _utm_central_lon(epsg: int) -> tuple[float, bool]:
     code = epsg % 100
     north = 32600 < epsg < 32661

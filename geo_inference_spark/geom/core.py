@@ -62,10 +62,13 @@ def _crossings(px: np.ndarray, py: np.ndarray, ring: Ring) -> np.ndarray:
         e = slice(s, min(s + step, n_edges))
         ex1, ey1, ex2, ey2 = x1[e], y1[e], x2[e], y2[e]
         cond = (ey1[None, :] > py[:, None]) != (ey2[None, :] > py[:, None])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = (ex2 - ex1)[None, :] * (py[:, None] - ey1[None, :]) / (
-                ey2 - ey1
-            )[None, :] + ex1[None, :]
+        # divide only where the edge straddles py: there ey1 != ey2 and
+        # |py - ey1| <= |ey2 - ey1|, so |xint - ex1| <= |ex2 - ex1| and
+        # nothing overflows; the other cells (a flat or subnormal dy
+        # could overflow there) keep their product, which cond masks out
+        xint = (ex2 - ex1)[None, :] * (py[:, None] - ey1[None, :])
+        np.divide(xint, (ey2 - ey1)[None, :], out=xint, where=cond)
+        xint += ex1[None, :]
         cross = cond & (px[:, None] < xint)
         inside ^= (np.count_nonzero(cross, axis=1) % 2).astype(bool)
     return inside

@@ -139,54 +139,3 @@ def wkt_of(wkb: bytes) -> str:
         + ")"
     )
 
-
-# ---------------------------------------------------------------- WKT parse
-
-def _parse_ring_text(t: str) -> np.ndarray:
-    pts = []
-    for pair in t.split(","):
-        x, y = pair.strip().split()
-        pts.append((float(x), float(y)))
-    return np.array(pts, dtype=np.float64)
-
-
-def _split_rings(body: str) -> list[str]:
-    """Split '(r1), (r2)' at depth-0 commas."""
-    out, depth, cur = [], 0, []
-    for ch in body:
-        if ch == "(":
-            depth += 1
-            if depth == 1:
-                cur = []
-                continue
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                out.append("".join(cur))
-                continue
-        if depth >= 1:
-            cur.append(ch)
-    return out
-
-
-def from_wkt(wkt: str) -> bytes:
-    """WKT -> WKB for POINT / POLYGON / MULTIPOLYGON (check_geom
-    parity, utils/geo.py:76-81: the reference round-trips geometry
-    through WKT strings)."""
-    s = wkt.strip()
-    up = s.upper()
-    if up.startswith("POINT"):
-        body = s[s.index("(") + 1 : s.rindex(")")]
-        x, y = body.split()
-        return point_to_wkb(float(x), float(y))
-    if up.startswith("POLYGON"):
-        body = s[s.index("(") + 1 : s.rindex(")")]
-        return polygon_to_wkb([_parse_ring_text(r) for r in _split_rings(body)])
-    if up.startswith("MULTIPOLYGON"):
-        body = s[s.index("(") + 1 : s.rindex(")")]
-        polys = []
-        for poly_txt in _split_rings(body):
-            # poly_txt is already '(ring1), (ring2)' — split again
-            polys.append([_parse_ring_text(r) for r in _split_rings(poly_txt)])
-        return multipolygon_to_wkb(polys)
-    raise ValueError(f"unsupported WKT geometry: {s[:24]}...")

@@ -212,28 +212,6 @@ def polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.ndarray]
     return cand[keep], ~interior[keep]
 
 
-def cells_in_bbox(
-    minx: float, miny: float, maxx: float, maxy: float, res: int
-) -> np.ndarray:
-    """Every cell that can contain a point of the (lon, lat) box:
-    centers enumerated over the box expanded by one circumradius (a
-    point's cell center is within s of it), the same axial sweep
-    polyfill uses for its bbox candidates."""
-    s = cell_size(res)
-    r_lo = int(np.floor((2.0 / 3.0 * miny) / s)) - 1
-    r_hi = int(np.ceil((2.0 / 3.0 * maxy) / s)) + 1
-    rows = []
-    for rr in range(r_lo, r_hi + 1):
-        y = s * 1.5 * rr
-        q_lo = int(np.floor((SQRT3 / 3.0 * minx - y / 3.0) / s)) - 1
-        q_hi = int(np.ceil((SQRT3 / 3.0 * maxx - y / 3.0) / s)) + 1
-        qs = np.arange(q_lo, q_hi + 1, dtype=np.int64)
-        rows.append(pack(res, qs, np.full_like(qs, rr)))
-    return (
-        np.concatenate(rows) if rows else np.empty(0, dtype=np.int64)
-    )
-
-
 def fit_cover_res(rings: list[np.ndarray], max_res: int, max_cells: int = 4096) -> int:
     """Coarsest-enough resolution so a polygon's cell cover stays
     bounded: at 10^12-page scale the cover table must stay broadcast-
@@ -250,11 +228,6 @@ def fit_cover_res(rings: list[np.ndarray], max_res: int, max_cells: int = 4096) 
         if approx <= max_cells:
             return res
     return 0
-
-
-def grid_disk(cell, k: int) -> np.ndarray:
-    """H3-compatible alias for k_ring (h3 v4 naming)."""
-    return k_ring(cell, k)
 
 
 def children(cell, child_res: int | None = None) -> np.ndarray:

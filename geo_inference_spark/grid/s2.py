@@ -207,16 +207,6 @@ def parent(cell_id, lvl: int):
     return (cell_id & ~(new_lsb - 1)) | new_lsb
 
 
-def range_min(cell_id):
-    """Smallest leaf id contained in the cell."""
-    return np.asarray(cell_id, dtype=np.int64) - (lsb(cell_id) - 1)
-
-
-def range_max(cell_id):
-    """Largest leaf id contained in the cell."""
-    return np.asarray(cell_id, dtype=np.int64) + (lsb(cell_id) - 1)
-
-
 def cell_to_latlng(cell_id):
     """Cell center -> (lat, lng) degree arrays."""
     cell_id = np.asarray(cell_id, dtype=np.int64)

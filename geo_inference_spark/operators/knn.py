@@ -1,5 +1,5 @@
-"""kNN and radius joins over a prepared point index: H3-style k-ring
-expansion with distance-bounded refinement (north-star stage c;
+"""kNN and radius joins over a prepared point index: H3-style cell
+covers with distance-bounded refinement (north-star stage c;
 SURVEY.md §2.3 J2 / §2.6 O3).
 
 The index, the (id, lat, lon, cell) projection of a points table, is
@@ -9,20 +9,36 @@ oldest-out per SparkContext, points plan (semanticHash, confirmed by
 sameResult), column names and res, unpersists what it evicts and
 re-persists an index whose cache was dropped. Like Spark's own cache
 it is keyed on the plan, not the data: after the source changes, call
-``spark.catalog.refreshByPath`` or ``spark.catalog.clearCache``.
+``spark.catalog.refreshByPath`` or ``spark.catalog.clearCache`` (an
+in-session write to the source refreshes it by path itself).
 
-A kNN round is one Spark job (two if its candidates are broadcast)
-that never shuffles the index: the (qid, cell) pairs of each
-unsatisfied query's k_ring(kr), inlined into the plan as literals that
-generated code holds by reference (no cell or query coordinate is
-compiled into Java; see ``_probe``), pick the index points, whose dist
-(the SQL expression the oracle runs) is collected and ranked by
-(dist, id) on the driver. A query is EXACT when it has k hits within
-the guarantee radius g(kr) = 1.5*s*(kr+1) - 2*s — any point outside
-the ring is provably farther (hex centers at hex-distance h are
->= 1.5*s*h apart, points at most one circumradius s from their
-center); otherwise kr doubles. Distances are planar lon/lat degrees
-(the hexgrid's own plane) or haversine km.
+With each materialisation of an index's cache, ``_index`` also
+collects the index's non-empty cells once: each one's point count and
+center (DGFIndex's pre-aggregated per-cell summary), so a query plans
+without touching data. The counts are tied to the cache's column-buffer
+RDD, which a re-persist and a refresh by path both replace, so they
+never outlive the data they count. Every point lies within b of its cell's center: b = s, the
+circumradius, in the grid's lon/lat plane, and b = sqrt(2)*s*KM_PER_DEG
+km on the sphere (move along the meridian by |dlat|, then along the
+parallel by at most |dlon|, and |dlat| + |dlon| <= sqrt(2)*s). The
+haversine formula is the great-circle distance between the points its
+coordinates name, so this holds for centers past +-180 or the poles
+too. A cell c thus holds only points within d(q,c) +- b of a query q.
+
+A query's bound D is ``radius_km`` for radius_join. For knn_join it
+is the least d(q,c) + b over which the cells' counts reach k, so at
+least k points lie within D. The cells with d(q,c) - b <= D (widened
+by float slack) hold every point within D, so they hold the k nearest
+and every tie at the k-th distance: one probe answers each query
+exactly, for both metrics, at the antimeridian and the poles too.
+
+A probe is one Spark job (two if its pairs are broadcast) that never
+shuffles the index: the (qid, cell) pairs, inlined into the plan as
+literals that generated code holds by reference (no cell or query
+coordinate is compiled into Java; see ``_probe``), pick the index
+points, whose dist (the SQL expression the oracle runs) is collected
+and ranked by (dist, id) on the driver. Distances are planar lon/lat
+degrees (the hexgrid's own plane) or haversine km.
 """
 
 from __future__ import annotations
@@ -62,83 +78,44 @@ def _dist_col(metric: str) -> F.Column:
     raise ValueError(f"unknown metric {metric!r}")
 
 
-def radius_lon_halfwidth(radius_km: float, lat_far_deg: float) -> float:
-    """Max geodesic longitude offset (degrees) of any point within
-    ``radius_km`` of a query, both within ``lat_far_deg`` of the
-    equator: from the haversine identity sin^2(theta/2) >=
-    cos(lat_q) cos(lat_p) sin^2(dlam/2), so sin(dlam/2) <=
-    sin(r/2R)/cos(lat_far). Returns 360 when the bound degenerates
-    (polar cap / globe-spanning radius)."""
-    x = np.sin(radius_km / (2.0 * R_KM)) / np.cos(np.radians(lat_far_deg))
-    if x >= 1.0:
-        return 360.0
-    return float(np.degrees(2.0 * np.arcsin(x)))
+def _center_dist(metric: str, qlat: float, qlon: float, lat, lon) -> np.ndarray:
+    """Distance from a query to each cell center (module docstring)."""
+    if metric == "planar":
+        return np.hypot(lon - qlon, lat - qlat)
+    h = (np.sin(np.radians(lat - qlat) / 2) ** 2
+         + np.cos(np.radians(qlat)) * np.cos(np.radians(lat))
+         * np.sin(np.radians(lon - qlon) / 2) ** 2)
+    return 2.0 * R_KM * np.arcsin(np.sqrt(np.clip(h, 0.0, 1.0)))
 
 
-def _ring_cover(queries: pd.DataFrame, res: int, kr: int) -> pd.DataFrame:
-    """(qid, cell) cover of each query's k-ring."""
-    cells = hexgrid.latlng_to_cell(
-        queries["lat"].to_numpy(), queries["lon"].to_numpy(), res
-    )
-    ring = hexgrid.k_ring(cells, kr)  # (nq, m)
-    return pd.DataFrame({
-        "qid": np.repeat(queries["qid"].to_numpy(), ring.shape[1]),
-        "cell": ring.ravel(),
-    })
-
-
-def _box_cover_cells(
-    qlat: float, qlon: float, radius_km: float, res: int
-) -> np.ndarray:
-    """Cell cover of the exact spherical bounding box of a
-    radius_km disc around (qlat, qlon): |dlat| <= r/KM_PER_DEG and
-    geodesic |dlam| <= radius_lon_halfwidth (tight at high latitude),
-    SPLIT AT +-180 into two lon ranges when the box wraps — so every
-    point within radius_km lies in a returned cell, for any query
-    including antimeridian and polar ones (polar caps degrade to the
-    whole latitude band, still a valid cover)."""
-    dlat = radius_km / KM_PER_DEG
-    lat0 = max(-90.0, qlat - dlat)
-    lat1 = min(90.0, qlat + dlat)
-    lat_far = min(89.99, max(abs(lat0), abs(lat1)))
-    dlam = radius_lon_halfwidth(radius_km, lat_far)
-    if dlam >= 180.0 or lat1 >= 89.99 or lat0 <= -89.99:
-        lon_ranges = [(-180.0, 180.0)]  # cap: the whole lat band
-    else:
-        lo, hi = qlon - dlam, qlon + dlam
-        lon_ranges = []
-        if lo < -180.0:  # wrap west: add the eastern remnant
-            lon_ranges.append((lo + 360.0, 180.0))
-            lo = -180.0
-        if hi > 180.0:  # wrap east: add the western remnant
-            lon_ranges.append((-180.0, hi - 360.0))
-            hi = 180.0
-        lon_ranges.append((lo, hi))
-    return np.unique(np.concatenate([
-        hexgrid.cells_in_bbox(l0, lat0, l1, lat1, res)
-        for l0, l1 in lon_ranges
-    ]))
-
-
-def _box_cover(
-    queries: pd.DataFrame, radius_km: float, res: int, max_cover_cells: int
-):
-    """(qid, cell) spherical-box cover of every query whose cover has
-    at most ``max_cover_cells`` cells (None if no query's does), and
-    the qids of the queries over that cap."""
-    frames, over = [], []
-    for qid, qlat, qlon in queries[["qid", "lat", "lon"]].itertuples(
-        index=False
-    ):
-        cells = _box_cover_cells(float(qlat), float(qlon), radius_km, res)
-        if cells.size > max_cover_cells:
-            over.append(int(qid))
-        else:
-            frames.append(pd.DataFrame({
-                "qid": np.full(cells.size, int(qid), np.int64),
-                "cell": cells,
-            }))
-    return (pd.concat(frames, ignore_index=True) if frames else None), over
+def _cover(
+    cells: tuple, queries: pd.DataFrame, metric: str, res: int,
+    k: int = 0, radius: float | None = None,
+) -> pd.DataFrame:
+    """(qid, cell) pairs: for each query, the non-empty cells that can
+    hold a point within its bound, ``radius`` or else the k-th
+    nearest's upper bound (module docstring)."""
+    cell, n, clat, clon = cells
+    s = hexgrid.cell_size(res)
+    b = s if metric == "planar" else np.sqrt(2.0) * s * KM_PER_DEG
+    qids, chosen = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for qid, qlat, qlon in queries[["qid", "lat", "lon"]].itertuples(index=False):
+        d = _center_dist(metric, qlat, qlon, clat, clon)
+        bound = radius
+        if bound is None:
+            # the k nearest centers' cells hold >= k points: the bound
+            # is the upper one of the cell where, nearest first, the
+            # counts reach k
+            near = np.argpartition(d, k - 1)[:k] if k < len(d) else np.arange(len(d))
+            near = near[np.argsort(d[near])]
+            reach = np.searchsorted(np.cumsum(n[near]), k)
+            bound = d[near[reach]] + b if reach < len(near) else np.inf
+        # the slack covers float error in d, in the SQL dist and near
+        # the antipode, where asin amplifies it
+        keep = cell[d - b <= bound + 1e-6 * (bound + b)]
+        qids.append(np.full(keep.size, qid, np.int64))
+        chosen.append(keep)
+    return pd.DataFrame({"qid": np.concatenate(qids), "cell": np.concatenate(chosen)})
 
 
 # A probe inlines up to this many (qid, cell) pairs into its plan as SQL
@@ -194,16 +171,48 @@ def _keyed_points(
     )
 
 
-# The indexes of the last few (points plan, columns, res), oldest out.
-_INDEXES: dict[tuple, tuple] = {}
+def _count_cells(batches):
+    cells = [pdf["cell"].to_numpy() for pdf in batches]
+    if cells:  # one row per distinct cell of the partition
+        cell, n = np.unique(np.concatenate(cells), return_counts=True)
+        yield pd.DataFrame({"cell": cell, "n": n})
+
+
+def _cells(idx: DataFrame) -> tuple:
+    """(cell, count, center lat, center lon) arrays of the non-empty
+    cells of ``idx``; an off-globe point (cell 0) has no cell. One
+    Spark job that also fills the index's cache: counted per partition,
+    summed on the driver (an aggregate shuffles, and with adaptive
+    execution it ran three jobs on a cold index)."""
+    pdf = idx.select("cell").where("cell != 0").mapInPandas(
+        _count_cells, "cell long, n long").toPandas()
+    n = pdf.groupby("cell")["n"].sum()
+    cell = n.index.to_numpy(np.int64)
+    lat, lon = hexgrid.cell_to_latlng(cell)
+    return cell, n.to_numpy(np.int64), lat, lon
+
+
+def _buffers_id(idx: DataFrame) -> int:
+    """The id of the RDD that holds the persisted ``idx``'s cache: a
+    new one whenever the cache is dropped and re-persisted or refreshed
+    by path (both rebuild the cache from the source's current files)."""
+    cached = idx.sparkSession._jsparkSession.sharedState().cacheManager(
+        ).lookupCachedData(idx._jdf).get()
+    return cached.cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
+
+
+# The indexes of the last few (points plan, columns, res), oldest out:
+# [plan, index, its _cells, the _buffers_id they were counted from].
+_INDEXES: dict[tuple, list] = {}
 _INDEXES_MAX = 4
 _INDEXES_LOCK = threading.Lock()
 
 
 def _index(
     points: DataFrame, id_col: str, lat_col: str, lon_col: str, res: int
-) -> DataFrame:
-    """The persisted ``_keyed_points`` of ``points`` (module docstring)."""
+) -> tuple[DataFrame, tuple]:
+    """The persisted ``_keyed_points`` of ``points`` and its ``_cells``
+    (module docstring)."""
     plan = points._jdf.queryExecution().analyzed()
     key = (points.sparkSession.sparkContext, plan.semanticHash(),
            id_col, lat_col, lon_col, res)
@@ -216,16 +225,20 @@ def _index(
                 if old[0]._jsc is not None:  # its context still runs
                     _INDEXES[old][1].unpersist()
                 del _INDEXES[old]
-            hit = _INDEXES[key] = (
-                plan, _keyed_points(points, id_col, lat_col, lon_col, res))
+            hit = _INDEXES[key] = [
+                plan, _keyed_points(points, id_col, lat_col, lon_col, res),
+                None, None]
         if hit[1].storageLevel == StorageLevel.NONE:
             hit[1].persist()
-        return hit[1]
+        buffers = _buffers_id(hit[1])
+        if hit[3] != buffers:  # counts of another materialisation: stale
+            hit[2], hit[3] = _cells(hit[1]), buffers
+        return hit[1], hit[2]
 
 
 def _check_queries(queries: pd.DataFrame) -> None:
     """A query needs its own qid and a finite, in-range lat and lon: a
-    NaN or off-globe one has no cell to ring and no distance to rank by."""
+    NaN or off-globe one has no distance to rank by."""
     ll = np.abs(queries[["lat", "lon"]].to_numpy(dtype=np.float64))
     if not (ll <= [90, 180]).all():
         raise ValueError(
@@ -244,11 +257,8 @@ def knn_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     id_col: str = "page_id",
-    kr0: int = 1,
-    max_rounds: int = 8,
     metric: str = "planar",
     plan_sink: list | None = None,
-    max_cover_cells: int = 200_000,
 ) -> DataFrame:
     """Exact k nearest points per query -> (qid, id, dist, rn), in
     (qid, rn) order.
@@ -256,126 +266,26 @@ def knn_join(
     queries: pandas (qid, lat, lon). Ties broken by id for full
     determinism (matches the oracle's ORDER BY dist, id).
 
-    metric: 'planar' (lon/lat degrees; k-ring escalation with the
-    planar guarantee radius) or 'haversine' (great-circle km, the
-    geodesic answer at high latitude; escalation = radius-doubling
-    spherical-box covers, whose guarantee is the radius ITSELF: every
-    point within r km is in the cover, so >= k hits within r are
-    exact. The box splits at +-180 and widens to the full latitude
-    band at the poles, so such queries stay off the fallback).
+    metric: 'planar' (lon/lat degrees) or 'haversine' (great-circle
+    km, the geodesic answer at high latitude and across +-180).
 
-    Rounds and fallback probe the memoized index (module docstring)
-    with no Window and no shuffle and rank on the driver; a call
-    persists nothing and returns a local DataFrame of the ranked rows.
-    plan_sink, if given, gets each probe's executed plan.
+    One probe of the memoized index's cells that can hold a point
+    within each query's k-th nearest bound (module docstring), with no
+    Window and no shuffle, ranked on the driver; a call persists
+    nothing beyond the index and returns a local DataFrame of the
+    ranked rows. plan_sink, if given, gets the probe's executed plan.
     """
+    dist = _dist_col(metric)
     _check_queries(queries)
-    s = hexgrid.cell_size(res)
-    idx = _index(points, id_col, lat_col, lon_col, res)
-
-    def ranked(hits: DataFrame) -> pd.DataFrame:
-        hits = hits.select("qid", "id", _dist_col(metric).alias("dist"))
-        if plan_sink is not None:  # tests pin the plan shapes
+    idx, cells = _index(points, id_col, lat_col, lon_col, res)
+    cand = _cover(cells, queries, metric, res, k=k)
+    out = pd.DataFrame(columns=["qid", "id", "dist", "rn"])
+    if len(cand):
+        hits = _probe(spark, idx, cand, queries).select(
+            "qid", "id", dist.alias("dist"))
+        if plan_sink is not None:  # tests pin the plan shape
             plan_sink.append(hits._jdf.queryExecution().executedPlan().toString())
-        return _topk(hits.toPandas(), k)
-
-    remaining = queries[["qid", "lat", "lon"]].copy()
-    results: list = []
-    kr = kr0
-    r_km = 2.0 * s * KM_PER_DEG * kr0  # ~2 cells of geodesic radius
-    for _ in range(max_rounds):
-        if remaining.empty:
-            break
-        if metric == "planar":
-            cand = _ring_cover(remaining, res, kr)
-        else:
-            # a query over the cap gets no cover this round and
-            # survives to the fallback
-            cand, _ = _box_cover(remaining, r_km, res, max_cover_cells)
-            if cand is None:
-                break  # every remaining cover explodes: fallback
-        got = ranked(_probe(spark, idx, cand, remaining))
-        guarantee = (
-            1.5 * s * (kr + 1) - 2.0 * s if metric == "planar" else r_km
-        )
-        g = got.groupby("qid")["dist"].agg(["size", "max"])
-        done = g.index[(g["size"] >= k) & (g["max"] <= guarantee)]
-        results.append(got[got["qid"].isin(done)])
-        remaining = remaining[~remaining["qid"].isin(done)]
-        kr *= 2
-        r_km *= 2.0
-    # NOT a for/else: the fallback must also run when the loop BREAKS
-    # (every remaining cover past max_cover_cells), not only when it
-    # exhausts max_rounds — a for/else here silently dropped those
-    # queries (ADVICE r4 high).
-    if not remaining.empty:
-        # final fallback for stragglers (rare: queries in
-        # near-empty regions / antimeridian / polar cap). Bounded,
-        # not a crossJoin (VERDICT r2 #8): ONE mapInPandas pass
-        # over the index emits, per query, the partition's local
-        # top-k PLUS every row within an epsilon of the k-th
-        # distance (ADVICE r3: a fixed +8 margin breaks if >8
-        # candidates tie at the cut with ulp-level numpy/SQL
-        # divergence; the epsilon band is exact for ANY tie width
-        # since numpy-vs-SQL divergence is ulps, below 1e-6 rel).
-        # dist and the ranking are the rounds' (oracle-identical).
-        # qids stay int64: through float64 a qid above 2^53 changes,
-        # and two such qids can merge into one
-        qids = remaining["qid"].to_numpy(np.int64)
-        qll = remaining[["lat", "lon"]].to_numpy(np.float64)
-        metric_ = metric
-        k_ = k
-
-        def local_topk(batches):
-            for pdf in batches:
-                # a point off the globe (or NaN) has no cell, so no
-                # distance either: the same rule as latlng_to_cell
-                pdf = pdf[(pdf["lat"].abs() <= 90) & (pdf["lon"].abs() <= 180)]
-                if not len(pdf):
-                    continue
-                ids = pdf["id"].to_numpy(np.int64)
-                plat = pdf["lat"].to_numpy(np.float64)
-                plon = pdf["lon"].to_numpy(np.float64)
-                frames = []
-                for qid, (qlat, qlon) in zip(qids, qll):
-                    if metric_ == "planar":
-                        d = np.sqrt(
-                            (plon - qlon) ** 2 + (plat - qlat) ** 2
-                        )
-                    else:
-                        d = 2.0 * R_KM * np.arcsin(np.sqrt(
-                            np.sin(np.radians(plat - qlat) / 2) ** 2
-                            + np.cos(np.radians(qlat))
-                            * np.cos(np.radians(plat))
-                            * np.sin(np.radians(plon - qlon) / 2) ** 2
-                        ))
-                    order = np.lexsort((ids, d))
-                    if len(order) > k_:
-                        kth = d[order[k_ - 1]]
-                        eps = 1e-6 * (1.0 + abs(kth))
-                        sel = order[d[order] <= kth + eps]
-                    else:
-                        sel = order
-                    frames.append(pd.DataFrame({
-                        "qid": np.full(len(sel), qid, np.int64),
-                        "id": ids[sel],
-                        "lat": plat[sel],
-                        "lon": plon[sel],
-                        "qlat": np.full(len(sel), qlat),
-                        "qlon": np.full(len(sel), qlon),
-                    }))
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-        results.append(ranked(idx.mapInPandas(
-            local_topk,
-            "qid long, id long, lat double, lon double, qlat double, qlon double",
-        )))
-
-    out = (
-        pd.concat(results, ignore_index=True).sort_values(["qid", "rn"])
-        if results else pd.DataFrame(columns=["qid", "id", "dist", "rn"])
-    )
+        out = _topk(hits.toPandas(), k)
     return spark.createDataFrame(out, schema="qid long, id long, dist double, rn int")
 
 
@@ -388,35 +298,21 @@ def radius_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     id_col: str = "page_id",
-    max_cover_cells: int = 200_000,
 ) -> DataFrame:
     """All points within ``radius_km`` (haversine) of each query —
     the geofencing shape: (qid, id, dist_km), a lazy DataFrame.
 
-    Each query's cell cover probes the memoized index (module
-    docstring), which never shuffles; the exact haversine filter runs
-    on the candidates only. The cover is the cell set of the query's
-    exact spherical bounding box (_box_cover_cells), split at +-180,
-    so antimeridian geofences ride the same probe as interior ones and
-    never a nested-loop join (VERDICT r3 #6). Only queries whose cover
-    explodes past ``max_cover_cells`` (polar caps, globe-spanning
-    radii) fall back to an exact filter over one scan of the index.
+    One probe of the memoized index's cells that can hold a point
+    within ``radius_km`` (module docstring), which never shuffles the
+    index; the exact haversine filter runs on the candidates only.
+    Antimeridian and polar geofences ride the same probe as interior
+    ones, never a nested-loop join (VERDICT r3 #6).
     """
     _check_queries(queries)
-    idx = _index(points, id_col, lat_col, lon_col, res)
-    cover, fallback = _box_cover(queries, radius_km, res, max_cover_cells)
-    parts = [] if cover is None else [_probe(spark, idx, cover, queries)]
-    if fallback:
-        fb = spark.createDataFrame(  # columns are named by position
-            queries.loc[queries["qid"].isin(fallback), ["qid", "lat", "lon"]],
-            schema="qid long, qlat double, qlon double",
-        )
-        # a point off the globe has no distance: latlng_to_cell's rule
-        on_globe = (F.abs("lat") <= 90) & (F.abs("lon") <= 180)
-        parts.append(idx.where(on_globe).crossJoin(F.broadcast(fb)))
-    if not parts:  # empty query frame -> empty result (ADVICE r4)
+    idx, cells = _index(points, id_col, lat_col, lon_col, res)
+    cand = _cover(cells, queries, "haversine", res, radius=float(radius_km))
+    if not len(cand):  # no query, or no point near one
         return spark.createDataFrame([], schema="qid long, id long, dist_km double")
-    hits = [p.select("qid", "id", _dist_col("haversine").alias("dist_km"))
-            for p in parts]
-    out = hits[0] if len(hits) == 1 else hits[0].unionByName(hits[1])
-    return out.filter(F.col("dist_km") <= float(radius_km))
+    hits = _probe(spark, idx, cand, queries).select(
+        "qid", "id", _dist_col("haversine").alias("dist_km"))
+    return hits.filter(F.col("dist_km") <= float(radius_km))

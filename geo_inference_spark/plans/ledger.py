@@ -1,5 +1,5 @@
-"""Checkpoint ledger + per-partition lineage/metrics (north-rule:
-"resumable from checkpoint with per-partition lineage + metrics").
+"""Checkpoint ledger + per-unit metrics (north-rule: "resumable from
+checkpoint with per-partition lineage + metrics").
 
 The reference has no resume story — a crashed dask run restarts from
 zero. Here every stage's unit of work (a partition key: tile id, H3
@@ -10,14 +10,10 @@ catalog):
 
   ledger(stage, part_key, n_rows, wall_ms, committed_at)
 
-* ``remaining(all_units)``  = anti-join against the ledger — the
-  driver schedules only unfinished work after a crash.
-* ``instrumented(df)``      = wraps a DataFrame in a mapInPandas pass
-  that counts rows per Spark partition and emits a lineage row per
-  partition (partition id, row count) as a side table on completion.
-
-Both are ordinary DataFrames — metrics/lineage are queryable with the
-same engine, no side channel.
+``remaining(stage, units)`` anti-joins against the ledger, so the driver
+schedules only unfinished work after a crash. The ledger is an
+ordinary DataFrame: its metrics are queryable with the same engine,
+no side channel.
 """
 
 from __future__ import annotations
@@ -79,32 +75,6 @@ class CheckpointLedger:
         if not self._exists():
             return self.spark.createDataFrame([], schema=LEDGER_SCHEMA)
         return self.spark.read.parquet(self.path)
-
-
-LINEAGE_SCHEMA = "stage string, partition_id int, n_rows long, wall_ms long"
-
-
-def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """Per-Spark-partition lineage of a DataFrame: one row per task
-    (partition id, row count, wall ms). A mapInPandas side-pass — run
-    it on the same plan the production job executes to record which
-    partition produced what."""
-
-    def run(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        n = 0
-        t0 = time.perf_counter()
-        for pdf in batches:
-            n += len(pdf)
-        ms = int((time.perf_counter() - t0) * 1000)
-        yield pd.DataFrame(
-            [(stage, pid, n, ms)],
-            columns=["stage", "partition_id", "n_rows", "wall_ms"],
-        )
-
-    return df.mapInPandas(run, LINEAGE_SCHEMA)
 
 
 def run_with_ledger(

@@ -89,11 +89,6 @@ def minhash(d: str, j: int, shingle_expr: str, col: str = "text") -> str:
     return f"coalesce({_amin(d, hashed)}, {fallback})"
 
 
-def band_key(d: str, minhash_exprs: list[str]) -> str:
-    """LSH band key = md5 of the band's concatenated minhashes."""
-    return f"md5({concat(d, *minhash_exprs)})"
-
-
 def simhash_bits(d: str, nbits: int = 16, col: str = "text") -> str:
     """SimHash over whitespace tokens using md5 hex digits as the
     per-token bit source; returns a BIGINT in [0, 2^nbits).

@@ -29,12 +29,6 @@ from pyspark.sql.types import LongType
 
 from .cache import attach, release  # noqa: F401 (release re-exported)
 
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0 as double),"
-    " (acc, v) -> acc + v)"
-)
-
-
 _COS_UDF = None
 
 
@@ -42,7 +36,7 @@ def _cos_udf():
     """Full cosine quotient dot/(sqrt(na)*sqrt(nb)) of two raw vector
     columns in ONE pandas UDF. The dot and both norms accumulate
     SEQUENTIALLY over dimensions — the identical float64 left fold as
-    the _DOT SQL expression and the DuckDB oracles — and sqrt,
+    the DuckDB oracles — and sqrt,
     multiply and divide are single correctly-rounded IEEE-754 double
     ops wherever they run, so the value is bit-identical to the split
     norm-column + dot-column formulation — while the plan pays one

@@ -95,22 +95,18 @@ def test_non_finite_points_change_no_result(spark):
         got = knn_join(spark, df, QUERIES, k=5, res=7, **kw).toPandas()
         return got.sort_values(["qid", "rn"]).to_numpy().tolist()
 
-    def radius(df, **kw):
-        got = radius_join(spark, df, RADIUS_QUERIES, radius_km=700.0, res=6,
-                          **kw)
+    def radius(df):
+        got = radius_join(spark, df, RADIUS_QUERIES, radius_km=700.0, res=6)
         return sorted(map(tuple, got.toPandas().to_numpy().tolist()))
 
     exp_pip = pip(pages)
     assert exp_pip and pip(dirty) == exp_pip
-    # max_rounds=0 sends every query through the full-scan fallback
-    for kw in ({}, {"max_rounds": 0}, {"metric": "haversine"}):
+    for kw in ({}, {"metric": "haversine"}):
         exp = knn(pages, **kw)
         assert len(exp) == 5 * len(QUERIES)
         assert knn(dirty, **kw) == exp, kw
-    # max_cover_cells=0 sends every query through the full-scan fallback
-    for kw in ({}, {"max_cover_cells": 0}):
-        exp_radius = radius(pages, **kw)
-        assert exp_radius and radius(dirty, **kw) == exp_radius, kw
+    exp_radius = radius(pages)
+    assert exp_radius and radius(dirty) == exp_radius
 
 
 @pytest.mark.parametrize("qid,lat,lon,match", [

@@ -1,5 +1,7 @@
 """Geometry kernel unit tests (numpy oracle)."""
 
+import warnings
+
 import numpy as np
 import pytest
 
@@ -50,6 +52,36 @@ def test_pip_random_vs_matplotlib_free_oracle():
 
     exp = np.array([slow_pip(x, y) for x, y in zip(px, py)])
     assert (got == exp).all()
+
+
+def test_pip_near_horizontal_edges_warn_nothing():
+    """Edges whose dy is subnormal or zero overflow or divide by zero
+    for points they do not straddle; the ray-cast divides only where
+    an edge straddles the point, so it warns nothing and its parity
+    equals a per-edge reference in Python floats."""
+    tiny = 5e-324  # the least subnormal
+    ring = np.array(
+        [[0, 0], [10, tiny], [10, 1], [5, 1], [0, 1 + tiny], [-3, 1 + tiny],
+         [-3, 2 * tiny], [0, 0]],
+        dtype=float,
+    )
+    rng = np.random.RandomState(3)
+    px = np.r_[rng.uniform(-4, 11, 200), [1, 5, 9, 5, -1, 12]]
+    py = np.r_[rng.uniform(-1, 2, 200), [0, tiny, tiny / 2, 1, 1, 1e300]]
+    py[:50] = rng.choice([0, tiny, 2 * tiny, 1, 1 + tiny, -tiny], 50)
+
+    def ref(x, y):
+        inside = False
+        for (x1, y1), (x2, y2) in zip(ring[:-1].tolist(), ring[1:].tolist()):
+            if (y1 > y) != (y2 > y) and x < (x2 - x1) * (y - y1) / (y2 - y1) + x1:
+                inside = not inside
+        return inside
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = core.points_in_polygon(px, py, [ring])
+    assert got.tolist() == [ref(x, y) for x, y in zip(px.tolist(), py.tolist())]
+    assert got.any() and not got.all()
 
 
 def test_clip_area():
@@ -110,22 +142,12 @@ def test_strtree_matches_bruteforce():
 
 
 def test_wkt_roundtrip():
-    import numpy as np
-
-    from geo_inference_spark.geom.wkb import from_wkt, parse_wkb, wkt_of
-
+    """WKB built from rings prints as the WKT those rings spell."""
     ring = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], dtype=float)
     hole = np.array([[1, 1], [2, 1], [2, 2], [1, 2], [1, 1]], dtype=float)
     w = "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 2 1, 2 2, 1 2, 1 1))"
-    kind, rings = parse_wkb(from_wkt(w))
-    assert kind == "polygon" and len(rings) == 2
-    np.testing.assert_array_equal(rings[0], ring)
-    np.testing.assert_array_equal(rings[1], hole)
-    # dump -> parse -> dump fixpoint
-    assert wkt_of(from_wkt(wkt_of(from_wkt(w)))) == wkt_of(from_wkt(w))
-    # multipolygon + point
+    assert wkb.wkt_of(wkb.polygon_to_wkb([ring, hole])) == w
+    tri = np.array([[0, 0], [1, 0], [1, 1], [0, 0]], dtype=float)
     mp = "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((5 5, 6 5, 6 6, 5 5)))"
-    kind, polys = parse_wkb(from_wkt(mp))
-    assert kind == "multipolygon" and len(polys) == 2
-    kind, xy = parse_wkb(from_wkt("POINT (3.5 -2)"))
-    assert kind == "point" and xy == (3.5, -2.0)
+    assert wkb.wkt_of(wkb.multipolygon_to_wkb([[tri], [tri + 5]])) == mp
+    assert wkb.wkt_of(wkb.point_to_wkb(3.5, -2.0)) == "POINT (3.5 -2)"

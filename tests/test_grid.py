@@ -71,10 +71,6 @@ def test_s2_structure_and_roundtrip():
         p = s2.parent(leaf, lv)
         assert (s2.level(p) == lv).all()
         assert (p == s2.latlng_to_cell(lat, lng, lv)).all()
-        lo = s2.range_min(p).astype(np.uint64)
-        hi = s2.range_max(p).astype(np.uint64)
-        u = leaf.astype(np.uint64)
-        assert ((lo <= u) & (u <= hi)).all()
         clat, clng = s2.cell_to_latlng(p)
         assert (s2.latlng_to_cell(clat, clng, lv) == p).all()
 
@@ -108,7 +104,6 @@ def test_children_partition_property():
         assert (res == 7).all()
     # aperture-7 grid: ~7 children on average
     assert 5.5 <= np.mean(counts) <= 8.5, np.mean(counts)
-    assert (hg.grid_disk(cells[:3], 2) == hg.k_ring(cells[:3], 2)).all()
 
 
 def test_hex_ids_never_collide_across_resolutions():

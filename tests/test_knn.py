@@ -1,5 +1,6 @@
-"""kNN: k-ring expansion + distance-bounded refinement vs brute-force
-numpy oracle (SURVEY.md §2.6 O3)."""
+"""kNN and radius joins: one cell cover from the index's per-cell
+counts + distance-bounded refinement vs brute-force numpy oracle
+(SURVEY.md §2.6 O3)."""
 
 import re
 import uuid
@@ -47,8 +48,8 @@ def test_knn_exact_vs_brute_force(spark):
 
 
 def test_knn_sparse_region_escalates(spark):
-    # a query in the middle of the ocean forces ring escalation /
-    # fallback but must still be exact
+    # a query in the middle of the ocean: its cover reaches out to the
+    # nearest non-empty cells, and the answer must still be exact
     pages = pages_df(spark, 500, partitions=4)
     pts = pages.select("page_id", "lat", "lon").toPandas()
     queries = pd.DataFrame({"qid": [9], "lat": [-60.0], "lon": [170.0]})
@@ -59,11 +60,10 @@ def test_knn_sparse_region_escalates(spark):
     ] == [(i, round(d, 9)) for i, d in exp[9]]
 
 
-def test_knn_fallback_is_bounded_not_crossjoin(spark):
-    """VERDICT r2 #8: a straggler query must resolve through the
-    per-partition local-top-k fallback (one mapInPandas over the index,
-    re-ranked on the driver), never a crossJoin — and still be exact.
-    max_rounds=0 forces every query straight into the fallback."""
+def test_knn_sparse_query_is_one_narrow_probe(spark):
+    """VERDICT r2 #8: a sparse query is answered by the same one probe
+    as a dense one, a narrow scan of the cached index: never a
+    crossJoin, a full-scan pass or a shuffle, and still exact."""
     pages = pages_df(spark, 2000, partitions=8)
     pts = pages.select("page_id", "lat", "lon").toPandas()
     queries = pd.DataFrame(
@@ -71,7 +71,7 @@ def test_knn_fallback_is_bounded_not_crossjoin(spark):
     )
     sink: list = []
     got = knn_join(
-        spark, pages, queries, k=5, res=7, max_rounds=0, plan_sink=sink
+        spark, pages, queries, k=5, res=7, plan_sink=sink
     ).toPandas()
     exp = brute_force(pts, queries, 5)
     for qid, grp in got.groupby("qid"):
@@ -80,21 +80,18 @@ def test_knn_fallback_is_bounded_not_crossjoin(spark):
             (int(i), round(float(d), 9))
             for i, d in zip(grp["id"], grp["dist"])
         ] == [(i, round(d, 9)) for i, d in exp[int(qid)]], f"qid {qid}"
-    assert sink, "fallback did not run"
-    for plan in sink:
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "MapInPandas" in plan and "InMemoryTableScan" in plan
-        assert "Exchange" not in plan  # neither a shuffle nor a broadcast
+    assert len(sink) == 1, sink
+    plan = sink[0].split("InMemoryRelation")[0]
+    assert "InMemoryTableScan" in plan, sink[0]
+    for node in ("CartesianProduct", "BroadcastNestedLoopJoin", "MapInPandas",
+                 "Exchange"):  # neither a shuffle nor a broadcast
+        assert node not in plan, sink[0]
 
 
 def test_knn_haversine_antimeridian_and_pole_exact(spark):
     """Queries hugging the +-180 line or the polar cap must return
-    exact geodesic kNN. Since round 4 these ride the main path: the
-    haversine escalation uses spherical-box covers that split at
-    +-180 and degrade to the full band at the poles, so the guarantee
-    is the radius itself and never -inf (fallback remains only for
-    covers past the cell cap)."""
+    exact geodesic kNN: the cover's haversine distance to a cell
+    center wraps at +-180 and holds for centers past the pole."""
     from geo_inference_spark.operators.knn import knn_join
 
     # points straddling the antimeridian: geodesically near a +179.9
@@ -170,11 +167,10 @@ def test_knn_haversine_matches_bruteforce(spark):
     assert got["dist"].max() > 2.0 * KM_PER_DEG / 111.0  # > planar-deg scale
 
 
-def test_knn_all_covers_exceed_cap_still_exact(spark):
-    """ADVICE r4 (high): when EVERY remaining query's box cover blows
-    past max_cover_cells, the escalation loop breaks — and the break
-    must still reach the exact-scan fallback instead of silently
-    dropping the queries (the old for/else skipped it)."""
+def test_knn_haversine_polar_and_sparse_exact(spark):
+    """ADVICE r4 (high): a polar and a sparse haversine query, whose
+    answers lie many cells away, come back exact from the one probe,
+    neither dropped nor sent to a scan of the whole index."""
     pages = pages_df(spark, 1500, partitions=4)
     pts = pages.select("page_id", "lat", "lon").toPandas()
     queries = pd.DataFrame(
@@ -182,10 +178,9 @@ def test_knn_all_covers_exceed_cap_still_exact(spark):
     )
     sink: list = []
     got = knn_join(
-        spark, pages, queries, k=4, res=8, metric="haversine",
-        max_cover_cells=0, plan_sink=sink,  # every cover "explodes"
+        spark, pages, queries, k=4, res=8, metric="haversine", plan_sink=sink,
     ).toPandas()
-    assert sink, "break did not reach the fallback"
+    assert len(sink) == 1 and "MapInPandas" not in sink[0].split("InMemoryRelation")[0]
     assert sorted(got["qid"].unique().tolist()) == [0, 1]
     lat, lon = pts["lat"].to_numpy(), pts["lon"].to_numpy()
     for _, q in queries.iterrows():
@@ -217,10 +212,9 @@ def test_radius_join_empty_queries_returns_empty(spark):
 
 def test_radius_join_matches_bruteforce_incl_antimeridian(spark):
     """Geofence radius query == brute-force haversine filter, including
-    a query hugging the antimeridian — which rides the spherical-box
-    cell cover (lon ranges split at +-180) on the SAME broadcast
-    semi-join path as interior queries: no
-    BroadcastNestedLoopJoin anywhere in the plan (VERDICT r3 #6)."""
+    a query hugging the antimeridian — which rides the SAME cell-cover
+    probe as interior queries: no BroadcastNestedLoopJoin anywhere in
+    the plan (VERDICT r3 #6)."""
     from geo_inference_spark.operators.knn import radius_join
 
     pages = pages_df(spark, 3000, partitions=4)
@@ -268,44 +262,67 @@ def _twin_points():
     return pd.DataFrame({"page_id": ids, "lat": lat, "lon": lon})
 
 
+def _ranked(pts: pd.DataFrame, q, k: int, metric: str) -> pd.DataFrame:
+    """Brute force: the k nearest of ``pts`` to ``q`` by (dist, id),
+    off-globe rows excluded."""
+    pts = pts[(pts["lat"].abs() <= 90) & (pts["lon"].abs() <= 180)]
+    lat, lon = pts["lat"].to_numpy(), pts["lon"].to_numpy()
+    if metric == "planar":
+        d = np.sqrt((lon - q.lon) ** 2 + (lat - q.lat) ** 2)
+    else:
+        a = (np.sin(np.radians(lat - q.lat) / 2) ** 2
+             + np.cos(np.radians(q.lat)) * np.cos(np.radians(lat))
+             * np.sin(np.radians(lon - q.lon) / 2) ** 2)
+        d = 2 * 6371.0088 * np.arcsin(np.sqrt(a))
+    order = np.lexsort((pts["page_id"].to_numpy(), d))[:k]
+    return pd.DataFrame({"id": pts["page_id"].to_numpy()[order], "dist": d[order]})
+
+
 @pytest.mark.parametrize("metric", ["planar", "haversine"])
-def test_ring_path_and_fallback_agree(spark, metric):
-    """Twin paths: the indexed ring rounds and the full-scan fallback
-    (max_rounds=0) return identical (qid, id, dist, rn), ties at the
-    k-th distance included, and every qid unchanged up to int64 range
-    (2^53 + 3 and 2^53 + 4 are one float64)."""
-    pts = _twin_points()
-    pdf = spark.createDataFrame(pts, schema="page_id long, lat double, lon double")
+def test_one_plan_matches_brute_force(spark, metric):
+    """The one cover-and-probe plan returns the brute-force (id, dist)
+    ranking: ties at the k-th distance broken by id, off-globe rows
+    never ranked, every qid unchanged up to int64 range (2^53 + 3 and
+    2^53 + 4 are one float64), and every row when k exceeds them."""
+    pts = pd.concat([_twin_points(), pd.DataFrame({
+        "page_id": [-1, -2, -3], "lat": [95.0, 0.0, np.nan],
+        "lon": [0.0, 200.0, 10.0]})], ignore_index=True)
     queries = pd.DataFrame({
         "qid": [0, 1, 2**53 + 3, 2**53 + 4, 2**63 - 1],
         "lat": [10.0, -30.0, 0.0, 89.99, 35.0],
         "lon": [20.0, -60.0, -179.99, 0.0, 139.0],
     })
-    sink: list = []
-    ring = knn_join(spark, pdf, queries, k=4, res=6, metric=metric,
-                    plan_sink=sink).toPandas()
-    assert any("MapInPandas" not in p for p in sink), "no ring round ran"
-    fallback = knn_join(spark, pdf, queries, k=4, res=6, metric=metric,
-                        max_rounds=0).toPandas()
-    assert len(ring) == 4 * len(queries)
-    assert sorted(set(ring["qid"])) == queries["qid"].tolist()
-    pd.testing.assert_frame_equal(ring, fallback)
+    few = pts[pts["page_id"] < 100]  # 15 on-globe rows and the 3 off it
+    top = {}
+    for sub, k in ((pts, 4), (few, 20)):
+        df = spark.createDataFrame(sub, schema="page_id long, lat double, lon double")
+        got = top[k] = knn_join(
+            spark, df, queries, k=k, res=6, metric=metric).toPandas()
+        assert got["qid"].drop_duplicates().tolist() == queries["qid"].tolist()
+        for q in queries.itertuples():
+            exp = _ranked(sub, q, k, metric)
+            mine = got[got["qid"] == q.qid]
+            assert mine["rn"].tolist() == list(range(1, len(exp) + 1))
+            assert mine["id"].tolist() == exp["id"].tolist(), (metric, q.qid)
+            np.testing.assert_allclose(mine["dist"], exp["dist"], rtol=1e-12)
+    assert len(top[4]) == 4 * len(queries)
+    assert len(top[20]) == 15 * len(queries)
     # qid 1: two points on the query, then the two smallest ids of the
     # five duplicates tied at the k-th distance
     dups = pts[(pts["lat"] == -30.2) & (pts["lon"] == -60.1)]["page_id"]
-    assert ring[ring["qid"] == 1]["id"].tolist()[2:] == sorted(dups)[:2]
+    assert top[4][top[4]["qid"] == 1]["id"].tolist()[2:] == sorted(dups)[:2]
     if metric == "planar":  # the cross: four points tied at 0.5
-        assert ring[ring["qid"] == 0]["dist"].tolist() == [0.5] * 4
+        assert top[4][top[4]["qid"] == 0]["dist"].tolist() == [0.5] * 4
 
 
 def _dense_query():
-    # a hot city of the synthetic pages: ring 1 answers k=5 at res 8
+    # a hot city of the synthetic pages
     return pd.DataFrame({"qid": [0], "lat": [40.7], "lon": [-74.0]})
 
 
 def test_knn_index_is_built_once(spark, monkeypatch):
     """A second knn_join on the same points frame geocodes nothing: no
-    _keyed_points call, and its round plan reads the cached index with
+    _keyed_points call, and its probe plan reads the cached index with
     no ArrowEvalPython outside it."""
     from geo_inference_spark.operators import knn
 
@@ -319,7 +336,7 @@ def test_knn_index_is_built_once(spark, monkeypatch):
     second = knn_join(spark, pages, _dense_query(), k=5, plan_sink=sink)
     pd.testing.assert_frame_equal(second.toPandas(), first)
     assert not built
-    assert len(sink) == 1, "a dense query is answered by ring 1"
+    assert len(sink) == 1, "one probe per call"
     outside = sink[0].split("InMemoryRelation")[0]
     assert "InMemoryTableScan" in outside, sink[0]
     assert "ArrowEvalPython" not in outside, sink[0]
@@ -338,7 +355,7 @@ def _compiles(spark) -> int:
 def test_new_request_compiles_no_java(spark):
     """A probe holds a request's cells and coordinates by reference,
     never as literals in generated code: once a request kind has run,
-    a request with a new ring or centre reuses the compiled classes.
+    a request with new cells or a new centre reuses the compiled classes.
     A ring-1 planar probe's IN list of 7 literals compiled 3 new
     classes on every request. (radius_join's bound is still a literal:
     a new radius_km compiles new classes.)"""
@@ -363,20 +380,48 @@ def test_new_request_compiles_no_java(spark):
 
 
 def test_dense_knn_runs_at_most_two_jobs(spark):
-    """A dense single query, the caller's toPandas included, is one
-    probe job and one collect of the local result."""
+    """On a warm index every request kind, the caller's toPandas
+    included, is one probe job and at most one collect of the local
+    result: dense and sparse planar, dense and high-latitude
+    haversine, dense and antimeridian radius requests alike."""
     sc = spark.sparkContext
     pages = pages_df(spark, 3000, partitions=4)
-    knn_join(spark, pages, _dense_query(), k=5).toPandas()  # builds the index
-    group = f"dense-knn-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "dense kNN")
-    try:
-        got = knn_join(spark, pages, _dense_query(), k=5).toPandas()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(got) == 5
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    pts = pages.select("page_id", "lat", "lon").toPandas()
+
+    def q(lat, lon):
+        return pd.DataFrame({"qid": [0], "lat": [lat], "lon": [lon]})
+
+    requests = {
+        "dense planar": lambda: knn_join(spark, pages, _dense_query(), k=5),
+        "sparse planar": lambda: knn_join(spark, pages, q(-60.0, 170.0), k=5),
+        "dense haversine": lambda: knn_join(
+            spark, pages, _dense_query(), k=5, metric="haversine"),
+        "high-latitude haversine": lambda: knn_join(
+            spark, pages, q(78.0, 20.0), k=5, metric="haversine"),
+        "dense radius": lambda: radius_join(spark, pages, _dense_query(), 5.0),
+        "antimeridian radius": lambda: radius_join(
+            spark, pages, q(10.0, 179.95), 800.0),
+    }
+    radius = {"dense radius": (_dense_query(), 5.0),
+              "antimeridian radius": (q(10.0, 179.95), 800.0)}
+    for run in requests.values():
+        run().toPandas()  # builds the res-8 and res-6 indexes
+    for kind, run in requests.items():
+        group = f"knn-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, kind)
+        try:
+            got = run().toPandas()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        if kind in radius:  # every point within the radius, none beyond
+            query, km = radius[kind]
+            want = _ranked(pts, next(query.itertuples()), len(pts), "haversine")
+            assert len(got) and sorted(got["id"]) == sorted(
+                want["id"][want["dist"] <= km]), kind
+        else:
+            assert len(got) == 5, kind
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2, kind
 
 
 def test_same_shape_frames_never_share_an_index(spark):
@@ -401,14 +446,56 @@ def test_index_survives_clear_cache(spark):
     queries = pd.DataFrame({"qid": [0, 1], "lat": [40.7, -60.0], "lon": [-74.0, 170.0]})
     exp = brute_force(pts, queries, 4)
     knn_join(spark, pages, queries, k=4, res=7).toPandas()
-    idx = knn._index(pages, "page_id", "lat", "lon", 7)
+    idx, _ = knn._index(pages, "page_id", "lat", "lon", 7)
     spark.catalog.clearCache()
     assert idx.storageLevel == StorageLevel.NONE
     got = knn_join(spark, pages, queries, k=4, res=7).toPandas()
     for qid, grp in got.groupby("qid"):
         assert list(grp["id"]) == [i for i, _ in exp[int(qid)]], qid
     assert idx.storageLevel != StorageLevel.NONE  # persisted again
-    assert knn._index(pages, "page_id", "lat", "lon", 7) is idx
+    assert knn._index(pages, "page_id", "lat", "lon", 7)[0] is idx
+
+
+@pytest.mark.parametrize("refresh", ["clear_cache", "in_session_write", "refresh_by_path"])
+def test_rewritten_source_is_exact(spark, tmp_path, refresh):
+    """The per-cell counts are collected again whenever the index's
+    cache is rebuilt: after clearCache, after an in-session overwrite
+    of the source (Spark recaches by path) and after refreshByPath of
+    a source rewritten outside the session. Counts kept from the old
+    file would steer each query to the old points' cells and silently
+    drop the new points."""
+    import shutil
+
+    path = str(tmp_path / "points")
+    queries = pd.DataFrame({"qid": [0, 1], "lat": [10.0, -20.0], "lon": [20.0, 100.0]})
+    rng = np.random.default_rng(7)
+    for version in (1, 2):  # new points in every version of the file
+        pts = pd.DataFrame({
+            "page_id": np.arange(3000, dtype=np.int64),
+            "lat": rng.uniform(-60, 60, 3000),
+            "lon": rng.uniform(-180, 180, 3000),
+        })
+        new = spark.createDataFrame(pts).write.mode("overwrite")
+        if refresh == "refresh_by_path" and version == 2:
+            new.parquet(path + "-next")
+            shutil.rmtree(path)
+            shutil.move(path + "-next", path)
+            spark.catalog.refreshByPath(path)
+        else:
+            new.parquet(path)
+        if refresh == "clear_cache":
+            spark.catalog.clearCache()
+        df = spark.read.parquet(path)
+        got = knn_join(spark, df, queries, k=4, res=7).toPandas()
+        exp = brute_force(pts, queries, 4)
+        assert len(got) == 4 * len(queries)
+        for qid, grp in got.groupby("qid"):
+            assert list(grp["id"]) == [i for i, _ in exp[int(qid)]], (version, qid)
+        near = radius_join(spark, df, queries, radius_km=400.0).toPandas()
+        for q in queries.itertuples():
+            want = _ranked(pts, q, len(pts), "haversine")
+            assert sorted(near[near["qid"] == q.qid]["id"]) == sorted(
+                want["id"][want["dist"] <= 400.0]), (version, q.qid)
 
 
 def test_evicted_index_is_unpersisted(spark):
@@ -417,9 +504,9 @@ def test_evicted_index_is_unpersisted(spark):
     from geo_inference_spark.operators import knn
 
     frames = [pages_df(spark, 200 + i, partitions=2) for i in range(knn._INDEXES_MAX + 1)]
-    first = knn._index(frames[0], "page_id", "lat", "lon", 6)
+    first, _ = knn._index(frames[0], "page_id", "lat", "lon", 6)
     assert first.storageLevel != StorageLevel.NONE
     for f in frames[1:]:
         knn._index(f, "page_id", "lat", "lon", 6)
     assert first.storageLevel == StorageLevel.NONE
-    assert all(idx is not first for _, idx in knn._INDEXES.values())
+    assert all(entry[1] is not first for entry in knn._INDEXES.values())

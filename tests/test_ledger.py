@@ -12,7 +12,6 @@ from geo_inference_spark.geom.wkb import polygon_to_wkb
 from geo_inference_spark.operators.salting import salted_agg
 from geo_inference_spark.plans.ledger import (
     CheckpointLedger,
-    partition_lineage,
     run_with_ledger,
 )
 from geo_inference_spark.sources.sinks import (
@@ -186,14 +185,6 @@ def test_finalize_ignores_stale_unit_dirs(spark, tmp_path):
     # the unscoped glob (old behavior) would have double-counted
     stale = finalize_pip_job(spark, out).agg(F.sum("cnt")).collect()[0][0]
     assert stale > exp
-
-
-def test_partition_lineage_counts(spark):
-    df = spark.range(0, 1000, 1, 8)
-    lin = partition_lineage(df, "scan").toPandas()
-    assert lin["n_rows"].sum() == 1000
-    assert lin["stage"].eq("scan").all()
-    assert lin["partition_id"].nunique() == len(lin)
 
 
 def test_salted_agg_matches_plain(spark):

@@ -12,7 +12,7 @@ from geo_inference_spark.geom.core import (
     polygon_area,
     ring_signed_area,
 )
-from geo_inference_spark.geom.wkb import from_wkt, parse_wkb, polygon_to_wkb, wkt_of
+from geo_inference_spark.geom.wkb import polygon_to_wkb, wkt_of
 from geo_inference_spark.grid import hexgrid
 from geo_inference_spark.raster.polygonize import (
     boundary_edges,
@@ -80,10 +80,10 @@ def test_pip_matches_winding_independent_formulation(raw, seed):
 @settings(max_examples=60, deadline=None)
 def test_wkt_wkb_roundtrip_property(raw):
     ring = np.array(raw + raw[:1], dtype=float)
-    wkb = polygon_to_wkb([ring])
-    kind, rings = parse_wkb(from_wkt(wkt_of(wkb)))
-    assert kind == "polygon"
-    np.testing.assert_allclose(rings[0], ring, rtol=1e-9)
+    text = wkt_of(polygon_to_wkb([ring]))
+    assert text.startswith("POLYGON ((") and text.endswith("))")
+    pts = np.array([p.split() for p in text[10:-2].split(", ")], dtype=float)
+    np.testing.assert_allclose(pts, ring, rtol=1e-9)
 
 
 @given(st.lists(st.tuples(coord, coord), min_size=4, max_size=30),
@@ -192,45 +192,55 @@ def test_crs_roundtrip_property(lon, lat, epsg):
     assert abs(lo - lon) < 1e-7 and abs(la - lat) < 1e-7
 
 
-@given(
-    st.floats(-85, 85, allow_nan=False),
-    st.floats(-180, 180, allow_nan=False, exclude_max=True),
-    st.floats(5, 3000, allow_nan=False),
-    st.floats(0, 1, allow_nan=False),
-    st.floats(0, 1, allow_nan=False),
-    st.integers(0, 359),
-)
-@settings(max_examples=150, deadline=None)
-def test_box_cover_contains_every_point_within_radius(
-    qlat, qlon, radius_km, u, v, bearing_deg
-):
-    """Soundness of the spherical-box cell cover that backs both the
-    geodesic kNN escalation and radius_join: ANY point within
-    radius_km of the query (sampled by geodesic destination formula at
-    random fraction x bearing) must map to a cell in the cover —
-    including across the antimeridian and near the poles."""
-    from geo_inference_spark.grid import hexgrid
-    from geo_inference_spark.operators.knn import R_KM, _box_cover_cells
+def _awkward_points(rng, n):
+    """Uniform points plus clusters at the antimeridian, near both
+    poles and on +-89.99 and +-90."""
+    lat = np.r_[rng.uniform(-90, 90, n), rng.uniform(-5, 5, n),
+                rng.uniform(85, 90, n), rng.uniform(-90, -85, n),
+                rng.choice([89.99, -89.99, 90.0, -90.0], n)]
+    lon = np.r_[rng.uniform(-180, 180, n),
+                rng.choice([-1, 1], n) * rng.uniform(179, 180, n),
+                rng.uniform(-180, 180, 3 * n)]
+    return lat, lon
 
-    # destination point at distance d, bearing theta (great circle)
-    d = radius_km * u
-    th = np.radians(bearing_deg + 360.0 * v)
-    phi1, lam1 = np.radians(qlat), np.radians(qlon)
-    delta = d / R_KM
-    phi2 = np.arcsin(
-        np.sin(phi1) * np.cos(delta)
-        + np.cos(phi1) * np.sin(delta) * np.cos(th)
-    )
-    lam2 = lam1 + np.arctan2(
-        np.sin(th) * np.sin(delta) * np.cos(phi1),
-        np.cos(delta) - np.sin(phi1) * np.sin(phi2),
-    )
-    plat = float(np.degrees(phi2))
-    plon = float((np.degrees(lam2) + 180.0) % 360.0 - 180.0)
 
-    res = 5
-    cover = _box_cover_cells(qlat, qlon, radius_km, res)
-    cell = int(hexgrid.latlng_to_cell(
-        np.array([plat]), np.array([plon]), res
-    )[0])
-    assert cell in set(cover.tolist()), (qlat, qlon, radius_km, plat, plon)
+@given(st.integers(0, 2**32 - 1), st.integers(4, 8))
+@settings(max_examples=40, deadline=None)
+def test_cell_cover_holds_every_point_within_radius_and_the_k_nearest(seed, res):
+    """Soundness of the one cell cover behind knn_join and radius_join:
+    for queries at the antimeridian, near the poles and at +-89.99,
+    every point within radius_km, and each of the true k nearest
+    (every point tied with the k-th included, so whichever ids the
+    tie-break keeps), lies in a cell the cover chose, for both
+    metrics."""
+    import pandas as pd
+
+    from geo_inference_spark.operators.knn import R_KM, _cover
+
+    rng = np.random.default_rng(seed)
+    lat, lon = _awkward_points(rng, int(rng.integers(5, 60)))
+    cell = hexgrid.latlng_to_cell(lat, lon, res)
+    uniq, n = np.unique(cell, return_counts=True)
+    cells = (uniq, n, *hexgrid.cell_to_latlng(uniq))
+    qlat, qlon = _awkward_points(rng, 2)
+    queries = pd.DataFrame({"qid": np.arange(len(qlat)), "lat": qlat, "lon": qlon})
+    k = int(rng.integers(1, 12))
+    radius_km = float(rng.uniform(1, 3000))
+    for metric, kw in [("planar", {"k": k}), ("haversine", {"k": k}),
+                       ("haversine", {"radius": radius_km})]:
+        cover = _cover(cells, queries, metric, res, **kw)
+        for q in queries.itertuples():
+            chosen = set(cover["cell"][cover["qid"] == q.qid].tolist())
+            if metric == "planar":
+                d = np.hypot(lon - q.lon, lat - q.lat)
+            else:
+                a = (np.sin(np.radians(lat - q.lat) / 2) ** 2
+                     + np.cos(np.radians(q.lat)) * np.cos(np.radians(lat))
+                     * np.sin(np.radians(lon - q.lon) / 2) ** 2)
+                d = 2 * R_KM * np.arcsin(np.sqrt(a))
+            if "radius" in kw:
+                need = d <= radius_km
+            else:
+                need = d <= np.partition(d, k - 1)[k - 1]
+            missed = set(cell[need].tolist()) - chosen
+            assert not missed, (metric, kw, q.lat, q.lon, len(missed))
