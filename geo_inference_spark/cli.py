@@ -225,7 +225,12 @@ def run(args: dict) -> dict:
     from .operators.overlap import overlap_stitch, raster_to_chunks
     from .operators.vectorize import polygonize_tiles
     from .session import get_spark
-    from .sources.sinks import write_geojson, write_mask_tiles, write_yolo_csv
+    from .sources.sinks import (
+        write_coco_json,
+        write_geojson,
+        write_mask_tiles,
+        write_yolo_csv,
+    )
 
     spark = get_spark("geo-inference-cli", cores=args["cores"])
     # artifact cache rides the job's work_dir (reference
@@ -307,8 +312,7 @@ def run(args: dict) -> dict:
                 annos, cats, os.path.basename(args["image"]),
                 meta["width"], meta["height"],
             )
-            with open(cp, "w") as f:
-                json.dump(doc, f)
+            write_coco_json(doc, cp)
             out["coco"] = cp
     return out
 

@@ -223,9 +223,3 @@ def cell_to_latlng(cell_id):
     x, y, z = _face_uv_to_xyz(face, u, v)
     norm = np.sqrt(x * x + y * y + z * z)
     return _xyz_to_latlng(x / norm, y / norm, z / norm)
-
-
-def token(cell_id) -> str:
-    """Hex token (trailing zeros stripped), scalar convenience."""
-    h = f"{int(cell_id) & 0xFFFFFFFFFFFFFFFF:016x}".rstrip("0")
-    return h or "X"

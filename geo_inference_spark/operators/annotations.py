@@ -11,22 +11,22 @@ DataFrame re-expressions of the reference's file-in/file-out stage:
   size normalized by image dims (F9) -> columns [value, x, y, w, h].
 * ``coco_annotations`` == geojson2coco + df_to_coco_annos
   (utils/polygon.py:151-267, utils/geo_transforms.py:377-511):
-  first-seen category ids (A4 — via min(seq) ordering, never
-  partition order), sequential annotation ids (row_number over seq),
-  COCO bbox [x, y, w, h] (F7) and flattened exterior ring (F8).
+  COCO bbox [x, y, w, h] (F7) and flattened exterior ring (F8) in one
+  Arrow collect; first-seen category ids (A4 — in seq order, never
+  partition order) and sequential annotation ids are assigned on the
+  driver, where the one COCO document is built anyway.
 
 All geometry math runs in ONE Arrow-batched pandas UDF per pipeline
 (geom stats below); everything downstream is plain column algebra
 that Catalyst folds into the same stage — no per-row Python
-(input_hint), no extra shuffles except the final global sort for
-deterministic ids.
+(input_hint), and no shuffle but YOLO's final sort by seq.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -193,8 +193,8 @@ def coco_annotations(
     seq_col: str = "poly_id",
     starting_id: int = 1,
     image_id: int = 1,
-) -> tuple[DataFrame, DataFrame]:
-    """R6: (annotations_df, categories_df).
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """R6: (annotations, categories) pandas frames, from one collect.
 
     Category ids are assigned in FIRST-SEEN order of seq_col (A4 —
     the reference's pandas ``unique()`` order), annotation ids
@@ -211,39 +211,20 @@ def coco_annotations(
             st["maxx"] - st["minx"], st["maxy"] - st["miny"],
         ).alias("bbox"),
         st["ext_flat"].alias("segmentation"),
-    )
-    cats = (
-        base.groupBy("category_str")
-        .agg(F.min("seq").alias("first_seq"))
-        .withColumn(
-            "category_id",
-            F.row_number().over(Window.orderBy("first_seq")),
-        )
-        .select("category_str", "category_id")
-    )
-    annos = (
-        base.join(F.broadcast(cats), on="category_str")
-        .withColumn(
-            "annotation_id",
-            F.row_number().over(Window.orderBy("seq")) + F.lit(starting_id - 1),
-        )
-        .select(
-            F.col("annotation_id").alias("id"),
-            F.lit(image_id).alias("image_id"),
-            "category_id",
-            "segmentation",
-            "area",
-            "bbox",
-            F.lit(0).alias("iscrowd"),
-        )
-        .orderBy("id")
-    )
-    return annos, cats.orderBy("category_id")
+    ).toPandas().sort_values("seq", kind="stable", ignore_index=True)
+    codes, names = pd.factorize(base["category_str"])
+    annos = base.assign(
+        id=np.arange(starting_id, starting_id + len(base)),
+        image_id=image_id, category_id=codes + 1, iscrowd=0,
+    )[["id", "image_id", "category_id", "segmentation", "area", "bbox", "iscrowd"]]
+    cats = pd.DataFrame({"category_str": names,
+                         "category_id": np.arange(1, len(names) + 1)})
+    return annos, cats
 
 
 def coco_dict(
-    annos: DataFrame,
-    cats: DataFrame,
+    annos: pd.DataFrame,
+    cats: pd.DataFrame,
     image_fname: str,
     width: int,
     height: int,
@@ -251,24 +232,24 @@ def coco_dict(
     info_dict: dict | None = None,
     license_dict: dict | None = None,
 ) -> dict:
-    """S11: assemble the single COCO JSON document (driver-side —
-    the document is one small object by definition)."""
+    """S11: assemble the single COCO JSON document from
+    coco_annotations' frames, as plain Python values."""
     out = {
         "annotations": [
             {
-                "id": r.id,
-                "image_id": r.image_id,
-                "category_id": r.category_id,
-                "segmentation": [list(part) for part in r.segmentation],
-                "area": r.area,
-                "bbox": list(r.bbox),
+                "id": int(r.id),
+                "image_id": int(r.image_id),
+                "category_id": int(r.category_id),
+                "segmentation": [list(map(float, p)) for p in r.segmentation],
+                "area": float(r.area),
+                "bbox": list(map(float, r.bbox)),
                 "iscrowd": 0,
             }
-            for r in annos.collect()
+            for r in annos.itertuples(index=False)
         ],
         "categories": [
-            {"id": r.category_id, "name": r.category_str}
-            for r in cats.collect()
+            {"id": int(i), "name": n}
+            for n, i in zip(cats["category_str"], cats["category_id"])
         ],
     }
     license_id = None

@@ -18,19 +18,24 @@ center (DGFIndex's pre-aggregated per-cell summary), so a query plans
 without touching data. The counts are tied to the cache's column-buffer
 RDD, which a re-persist and a refresh by path both replace, so they
 never outlive the data they count. Every point lies within b of its cell's center: b = s, the
-circumradius, in the grid's lon/lat plane, and b = sqrt(2)*s*KM_PER_DEG
-km on the sphere (move along the meridian by |dlat|, then along the
-parallel by at most |dlon|, and |dlat| + |dlon| <= sqrt(2)*s). The
-haversine formula is the great-circle distance between the points its
-coordinates name, so this holds for centers past +-180 or the poles
-too. A cell c thus holds only points within d(q,c) +- b of a query q.
+circumradius, in the grid's lon/lat plane. On the sphere, move along
+the meridian by |dlat|, then along the point's parallel by at most
+|dlon|: KM_PER_DEG * (|dlat| + cos(lat_p) * |dlon|) km. With
+dlat^2 + dlon^2 <= s^2 and |lat_p| >= |lat_c| - s, that is at most
+b = s * KM_PER_DEG * sqrt(1 + c^2), c = cos(min(90, max(0, |lat_c| - s)))
+degrees: sqrt(2) * s * KM_PER_DEG at the equator, less toward the
+poles. The haversine formula is the great-circle distance between the
+points its coordinates name, so this holds for centers past +-180 or
+the poles too. A cell c thus holds only points within d(q,c) +- b_c
+of a query q.
 
 A query's bound D is ``radius_km`` for radius_join. For knn_join it
-is the least d(q,c) + b over which the cells' counts reach k, so at
-least k points lie within D. The cells with d(q,c) - b <= D (widened
-by float slack) hold every point within D, so they hold the k nearest
-and every tie at the k-th distance: one probe answers each query
-exactly, for both metrics, at the antimeridian and the poles too.
+is the least d(q,c) + b_c over which the cells' counts, taken in that
+order, reach k, so at least k points lie within D. The cells with
+d(q,c) - b_c <= D (widened by float slack) hold every point within D,
+so they hold the k nearest and every tie at the k-th distance: one
+probe answers each query exactly, for both metrics, at the
+antimeridian and the poles too.
 
 A probe is one Spark job (two if its pairs are broadcast) that never
 shuffles the index: the (qid, cell) pairs, inlined into the plan as
@@ -97,19 +102,24 @@ def _cover(
     nearest's upper bound (module docstring)."""
     cell, n, clat, clon = cells
     s = hexgrid.cell_size(res)
-    b = s if metric == "planar" else np.sqrt(2.0) * s * KM_PER_DEG
+    if metric == "planar":
+        b = s
+    else:
+        c = np.cos(np.radians(np.clip(np.abs(clat) - s, 0.0, 90.0)))
+        b = s * KM_PER_DEG * np.sqrt(1.0 + c * c)
     qids, chosen = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
     for qid, qlat, qlon in queries[["qid", "lat", "lon"]].itertuples(index=False):
         d = _center_dist(metric, qlat, qlon, clat, clon)
         bound = radius
         if bound is None:
-            # the k nearest centers' cells hold >= k points: the bound
-            # is the upper one of the cell where, nearest first, the
-            # counts reach k
-            near = np.argpartition(d, k - 1)[:k] if k < len(d) else np.arange(len(d))
-            near = near[np.argsort(d[near])]
+            # the k cells with the least upper bounds hold >= k points:
+            # the bound is the upper one of the cell where, least
+            # first, the counts reach k
+            up = d + b
+            near = np.argpartition(up, k - 1)[:k] if k < len(up) else np.arange(len(up))
+            near = near[np.argsort(up[near])]
             reach = np.searchsorted(np.cumsum(n[near]), k)
-            bound = d[near[reach]] + b if reach < len(near) else np.inf
+            bound = up[near[reach]] if reach < len(near) else np.inf
         # the slack covers float error in d, in the SQL dist and near
         # the antipode, where asin amplifies it
         keep = cell[d - b <= bound + 1e-6 * (bound + b)]

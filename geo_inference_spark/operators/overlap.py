@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..raster.kernels import finalize_cell, model_window_patch
+from ..sources.raster_io import assemble_mask
 
 CHUNK_SCHEMA = "ty int, tx int, chunk binary"
 FRAG_SCHEMA = "oy int, ox int, frag binary"
@@ -173,16 +174,6 @@ def validity_mask(arr: np.ndarray, no_data: float) -> np.ndarray:
     return (arr != no_data).all(axis=0)
 
 
-def assemble_mask(tiles: list, ny: int, nx: int, stride: int) -> np.ndarray:
-    """Collected (ty, tx, mask) rows -> dense (ny*s, nx*s) uint8."""
-    out = np.zeros((ny * stride, nx * stride), dtype=np.uint8)
-    for ty, tx, mb in tiles:
-        out[ty * stride : (ty + 1) * stride, tx * stride : (tx + 1) * stride] = (
-            bytes_to_np(mb, (stride, stride), np.uint8)
-        )
-    return out
-
-
 def infer_raster(
     spark: SparkSession,
     arr: np.ndarray,
@@ -204,9 +195,7 @@ def infer_raster(
         chunks, model_fn, arr.shape[0], stride, ny, nx,
         num_classes, nd, prediction_threshold,
     ).collect()
-    mask = assemble_mask(
-        [(r.ty, r.tx, r.mask) for r in tiles], ny, nx, stride
-    )[: arr.shape[1], : arr.shape[2]]
+    mask = assemble_mask(tiles, stride, arr.shape[1], arr.shape[2])
     return np.where(valid, mask, np.uint8(255))
 
 

@@ -19,7 +19,8 @@ merged component is its ``poly_id``.
        round-1 scale-killer #2): numpy label propagation on the
        collected perimeter-sized graph when small, distributed hash-min
        label propagation + pointer jumping (O(log diameter) rounds)
-       above a measured edge-count threshold; gid = min seed
+       when one collect capped at CC_DRIVER_EDGES + 1 edges comes back
+       full; gid = min seed
     -> edges left-join the labels, gid = coalesce(gid, nid): a
        component that touches no border is its own global component
     -> SHUFFLE groupBy(gid): reversed duplicate edge pairs (the two
@@ -141,9 +142,11 @@ def border_labels(edges: DataFrame) -> DataFrame:
     nid, which the caller's left join and ``coalesce(gid, nid)``
     supply.
 
-    Two regimes by measured edge count:
-    * up to CC_DRIVER_EDGES -> one Arrow collect of the edges and
-      vectorized min-label propagation on the driver;
+    Two regimes, told apart by one Arrow collect capped at
+    CC_DRIVER_EDGES + 1 edges (a bounded collect never holds more than
+    that on the driver, so no separate count is needed to protect it):
+    * up to CC_DRIVER_EDGES -> that collect is the input of vectorized
+      min-label propagation on the driver;
     * above it -> distributed hash-min label propagation with pointer
       jumping (the O(log diameter) doubling of Kiveris et al.'s star
       operations), on RDDs: Catalyst recomputes plan statistics
@@ -155,21 +158,12 @@ def border_labels(edges: DataFrame) -> DataFrame:
       machinery — the classic reason iterative graph algorithms
       (GraphX, Pregel) live on RDDs.
     """
-    spark = edges.sparkSession
-    # regime gate: a cheap count() first — collecting threshold+1 Row
-    # objects to decide the graph is "small" could itself OOM the
-    # driver the gate exists to protect (ADVICE r2). edges is persisted
-    # so the count's scan is reused by whichever branch runs next.
-    edges = edges.persist()
-    n_edges = edges.count()
-    try:
-        if n_edges <= CC_DRIVER_EDGES:
-            labels = _labels_on_driver(edges.toPandas())
-        else:
-            labels = _labels_distributed(edges, n_edges)
-        return spark.createDataFrame(labels, schema="nid long, gid long")
-    finally:
-        edges.unpersist()
+    ep = edges.limit(CC_DRIVER_EDGES + 1).toPandas()
+    if len(ep) <= CC_DRIVER_EDGES:
+        labels = _labels_on_driver(ep)
+    else:
+        labels = _labels_distributed(edges)
+    return edges.sparkSession.createDataFrame(labels, schema="nid long, gid long")
 
 
 def _labels_on_driver(ep: pd.DataFrame) -> pd.DataFrame:
@@ -200,11 +194,11 @@ def _labels_on_driver(ep: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame({"nid": ids, "gid": ids[lbl]})
 
 
-def _labels_distributed(edges: DataFrame, n_edges: int):
+def _labels_distributed(edges: DataFrame):
     # partition count sized to the border graph, NOT inherited from
     # upstream — every Python-RDD task costs a worker round-trip, so
     # a tiny graph on many partitions is pure overhead
-    p = max(4, min(256, n_edges // 2_000_000))
+    p = max(4, min(256, edges.count() // 2_000_000))
     e = edges.rdd.map(lambda r: (r[0], r[1]))
     both = (
         e.union(e.map(lambda kv: (kv[1], kv[0]))).distinct(p).cache()

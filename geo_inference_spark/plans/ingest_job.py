@@ -26,11 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ledger import CheckpointLedger, run_with_ledger
-from .pip_job import unit_keys
-
-
-def _unit_index(key: str) -> int:
-    return int(key.rsplit("#u", 1)[1].split("/")[0])
+from .pip_job import _unit_index, unit_keys
 
 
 def resumable_warc_ingest(

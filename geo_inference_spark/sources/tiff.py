@@ -20,9 +20,8 @@ needs is implemented directly:
   (with horizontal-differencing predictor 2) and deflate (8/32946)
   codecs; uint8/16/32 and float32/64 samples. Returns
   ((bands, H, W) float64, meta) with the same meta dict shape as
-  raster_io.read_geotiff_chunks.
-* ``read_geotiff_chunks_stdlib`` — the scan: array -> the engine's
-  (ty, tx, chunk) table.
+  raster_io.read_geotiff_chunks; ``overlap.raster_to_chunks`` cuts the
+  array into the engine's (ty, tx, chunk) table.
 
 The LZW codec follows TIFF 6.0 §13: MSB-first variable-width codes
 starting at 9 bits, ClearCode 256 / EOI 257, table reset at 4094, and
@@ -807,16 +806,6 @@ def read_geotiff(path: str):
         "count": bands,
         "nodata": None,
     }
-
-
-def read_geotiff_chunks_stdlib(spark, path: str, stride: int, partitions=None):
-    """GeoTIFF -> ((ty, tx, chunk) table, ny, nx, meta) with no
-    rasterio — the stdlib twin of raster_io.read_geotiff_chunks."""
-    from ..operators.overlap import raster_to_chunks
-
-    arr, meta = read_geotiff(path)
-    df, ny, nx = raster_to_chunks(spark, arr, stride, partitions)
-    return df, ny, nx, meta
 
 
 def read_stac_item_stack(item_path: str, bands_requested: list[str]):

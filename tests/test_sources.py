@@ -236,12 +236,8 @@ def test_geotiff_roundtrip_and_chunks(spark, tmp_path):
     feeds the stitch unchanged."""
     import numpy as np
 
-    from geo_inference_spark.operators.overlap import bytes_to_np
-    from geo_inference_spark.sources.tiff import (
-        read_geotiff,
-        read_geotiff_chunks_stdlib,
-        write_geotiff,
-    )
+    from geo_inference_spark.operators.overlap import bytes_to_np, raster_to_chunks
+    from geo_inference_spark.sources.tiff import read_geotiff, write_geotiff
 
     rng = np.random.RandomState(5)
     t = (0.5, 0.0, 100.0, 0.0, -0.5, 300.0)
@@ -262,7 +258,7 @@ def test_geotiff_roundtrip_and_chunks(spark, tmp_path):
     np.testing.assert_array_equal(got2[0], m.astype(np.float64))
     assert meta2["crs"] == "EPSG:4326"
     # distributed chunk scan
-    df, ny, nx, meta3 = read_geotiff_chunks_stdlib(spark, fp, stride=8)
+    df, ny, nx = raster_to_chunks(spark, got, stride=8)
     assert (ny, nx) == (9, 5)  # 70->72, 40->40 at stride 8
     r = {(x.ty, x.tx): bytes_to_np(bytes(x.chunk), (3, 8, 8))
          for x in df.collect()}

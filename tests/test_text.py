@@ -311,5 +311,13 @@ def test_dedup_clusters_identity_seeds_big_regime_parity(spark, monkeypatch):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     small = [tuple(r) for r in DD.dedup_clusters(docs).collect()]
     monkeypatch.setattr(V, "CC_DRIVER_EDGES", 0)
+    real, ran = V._labels_distributed, []
+
+    def spy(edges):
+        ran.append(True)
+        return real(edges)
+
+    monkeypatch.setattr(V, "_labels_distributed", spy)
     big = [tuple(r) for r in DD.dedup_clusters(docs).collect()]
+    assert ran
     assert small == big

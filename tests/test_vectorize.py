@@ -2,6 +2,8 @@
 pipelines vs hand-derived oracles (reference semantics:
 utils/polygon.py gdf_to_yolo / geojson2coco)."""
 
+import json
+import uuid
 import warnings
 
 import numpy as np
@@ -161,12 +163,12 @@ def test_coco_first_seen_categories_and_ids(spark):
     annos, cats = coco_annotations(
         _poly_df(spark), TRANSFORM, W, H, category_col="value"
     )
-    cat_rows = cats.collect()
+    cat_rows = list(cats.itertuples(index=False))
     # value 1.0 first seen at seq 1 -> id 1; value 2.0 at seq 2 -> id 2
     assert [(r.category_str, r.category_id) for r in cat_rows] == [
         ("1.0", 1), ("2.0", 2),
     ]
-    a = annos.collect()
+    a = list(annos.itertuples(index=False))
     assert [r.id for r in a] == [1, 2, 3]
     assert [r.category_id for r in a] == [1, 2, 1]
     r1 = a[0]
@@ -182,6 +184,42 @@ def test_coco_first_seen_categories_and_ids(spark):
     ]
     assert doc["licenses"][0]["id"] == 1
     assert len(doc["annotations"]) == 3
+
+
+def test_coco_export_is_one_job_and_plain_json(spark):
+    """coco_annotations + coco_dict collect the polygons once: one
+    Spark job, and a document of plain Python values that json.dumps
+    takes with no ``default``."""
+    sc = spark.sparkContext
+    polys = _poly_df(spark)
+    group = f"coco-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "coco export")
+    try:
+        annos, cats = coco_annotations(polys, TRANSFORM, W, H)
+        doc = coco_dict(annos, cats, "img.tif", W, H)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert json.loads(json.dumps(doc)) == doc
+    assert [a["id"] for a in doc["annotations"]] == [1, 2, 3]
+
+
+def test_border_labels_driver_regime_collects_once(spark, monkeypatch):
+    """Up to CC_DRIVER_EDGES edges, border_labels is one bounded
+    collect: nothing persists or counts the edges."""
+    from pyspark.sql import DataFrame
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("border_labels counted or persisted its edges")
+
+    for name in ("count", "persist", "cache"):
+        monkeypatch.setattr(DataFrame, name, forbidden)
+    edges = spark.createDataFrame(
+        [(1, 2), (3, 2), (7, 9)], schema="nid1 long, nid2 long"
+    )
+    got = sorted(tuple(r) for r in V.border_labels(edges).collect())
+    assert got == [(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)]
 
 
 def test_annotations_multipolygon_full_parts(spark):
@@ -200,7 +238,7 @@ def test_annotations_multipolygon_full_parts(spark):
         schema="poly_id long, value double, geom_wkb binary",
     )
     annos, _ = coco_annotations(df, TRANSFORM, W, H, category_col="value")
-    a = annos.collect()[0]
+    a = next(annos.itertuples(index=False))
     # union bbox spans both parts: x 2..12, y 2..10 in px space
     assert list(a.bbox) == [2.0, 2.0, 10.0, 8.0]
     assert a.area == 8.0  # 2x2 + 2x2 px squares
@@ -217,6 +255,13 @@ def test_distributed_cc_snake_many_tiles(spark, monkeypatch):
     diameter — exercises the distributed hash-min + pointer-jumping
     connected components (no driver union-find)."""
     monkeypatch.setattr(V, "CC_DRIVER_EDGES", 0)
+    real, ran = V._labels_distributed, []
+
+    def spy(edges):
+        ran.append(True)
+        return real(edges)
+
+    monkeypatch.setattr(V, "_labels_distributed", spy)
     mask = np.zeros((128, 128), dtype=np.uint8)
     for band in range(0, 128, 16):
         mask[band, :] = 1  # horizontal run
@@ -229,6 +274,7 @@ def test_distributed_cc_snake_many_tiles(spark, monkeypatch):
         polygonize_tiles(spark, tiles_of(spark, mask, 8), 8)
     )
     exp = mask_to_polygons(mask)
+    assert ran
     assert len(got) == len(exp) == 1
     assert got[0][2] == polygon_area(exp[0][0])
     for gr, er in zip(got[0][0], exp[0][0]):
